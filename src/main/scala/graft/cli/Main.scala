@@ -544,10 +544,10 @@ object Main {
             Thread.sleep(100)
           }
           query.processAllAvailable()
-          // The engine calls source.commit(N) only while constructing
-          // batch N+1; a drained once-run has no next batch, so the
-          // final offset would never reach the commit→ack path and the
-          // slot would replay the entire run on restart. Ack the
+          // The source acks a committed offset from the following
+          // trigger; a once-run stops without waiting for one, so the
+          // final offset might never reach the ack hook and the slot
+          // would replay the entire run on restart. Ack the
           // DRAIN-STABLE line count `last` — NOT a fresh
           // receiver.linesSpooled read: a live server can spool more
           // lines between the final processAllAvailable and this ack,

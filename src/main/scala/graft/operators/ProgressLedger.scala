@@ -22,10 +22,13 @@ import org.apache.spark.sql.functions._
   *    prefix scan over contiguous ord ranges, and a tiny combine over
   *    the bucket summaries — the joined status is computed exactly
   *    once.
-  *  - [[InMemoryLedger]]: the faithful insertion-ordered ledger used
-  *    driver-side by the streaming ack loop, including the reference's
-  *    re-delivery supersession rules (a transaction re-delivered under
-  *    a newer timeBasedKey deletes the stale entry).
+  *  - [[InMemoryLedger]]: the faithful insertion-ordered ledger,
+  *    including the reference's re-delivery supersession rules (a
+  *    transaction re-delivered under a newer timeBasedKey deletes the
+  *    stale entry). The streaming pipeline does not use it: its ack
+  *    frontier is the source's committed offset
+  *    ([[graft.sources.WalMicroBatchStream]]); this ledger is the
+  *    model of the reference's tracker that the specs check against.
   */
 object ProgressLedger {
 

@@ -1,20 +1,13 @@
 package graft.operators
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** One engine metric sample (reference stats/stat.go:10-31). */
-final case class Stat(
-    component: String,
-    statType: String, // "count" | "histogram"
-    statName: String,
-    unit: String,
-    value: Long,
-    ts: Timestamp)
-
 /** Stats aggregation (SURVEY §2 S1; reference stats/aggregator).
+  *
+  * Input rows are engine metric samples (reference stats/stat.go:10-31):
+  * component, statType ("count" | "histogram"), statName, unit, value,
+  * ts.
   *
   * Tumbling 60-second buckets keyed by (component, statName, statType,
   * unit); count stats are summed, histogram stats additionally emit
@@ -39,8 +32,4 @@ object StatsAggregator {
         col("window.start").as("windowStart"),
         col("component"), col("statName"), col("statType"), col("unit"),
         col("total"), col("samples"), col("min"), col("max"), col("avg"))
-
-  /** Streaming variant with the reference's 1 s late-data grace. */
-  def aggregateStream(stats: DataFrame, windowLength: String = "60 seconds"): DataFrame =
-    aggregate(stats.withWatermark("ts", "1 second"), windowLength)
 }

@@ -432,8 +432,8 @@ object Dedup {
       shingleSize: Int = 3, seed: Int = 42,
       maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // Materialize the BATCH signature table once ([[Materialize]],
-    // eager): the plan reads it three times — banding (sig), the
+    // Materialize the BATCH signature table once (eager
+    // localCheckpoint): the plan reads it three times — banding (sig), the
     // verification sets union (hs), and the id_b join-back (hs) — so
     // left lazy the batch text is scanned, shingled and minhashed 3×
     // per run (the r21 plan dump showed exactly this). Batch-sized
@@ -442,8 +442,9 @@ object Dedup {
     // `index` is deliberately NOT materialized — its two reads are
     // column-pruned scans (sig-only and hs-only) of the persisted
     // index table, which a materialization would un-prune.
-    val newIdx = Materialize.frame(
-      nearDedupIndex(newBatch, textCol, idCol, numHashes, shingleSize, seed))
+    val newIdx =
+      nearDedupIndex(newBatch, textCol, idCol, numHashes, shingleSize, seed)
+        .localCheckpoint()
     val newBands = bandRows(newIdx.select(col("id"), col("sig")), numHashes, bands)
       .withColumn("src", lit(1))
     val touched = newBands.select(col("band"), col("bandKey")).distinct()
@@ -469,11 +470,11 @@ object Dedup {
     // (measured at 100×: the double discovery alone made incremental
     // ingest slower than full recompute). Batch-bounded rows; blocks
     // are reclaimed by the ContextCleaner once the result is dropped.
-    val pairs = Materialize.frame(
-      aSide.join(bSide, Seq("band", "bandKey"))
-        .where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .distinct())
+    val pairs = aSide.join(bSide, Seq("band", "bandKey"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .distinct()
+      .localCheckpoint()
 
     // Fetch history `hs` only for CANDIDATE ids: the fat shingle-hash
     // column is the index's dominant bytes, and a plain join reads it
@@ -483,7 +484,7 @@ object Dedup {
     // batch-bounded (band collisions, bucket-capped), so push its
     // driver-side [min, max] as a 2-literal scan FILTER — parquet
     // row-group stats on `id` prune the untouched corpus's hs bytes
-    // when the index is written id-sorted ([[writeNearDedupIndex]]);
+    // when the index is written id-sorted;
     // a large IN list pushes down as exactly this range anyway, so the
     // O(1) plan loses nothing — and exact row membership rides a
     // broadcast semi-join instead of 50 k inlined literals.
@@ -505,17 +506,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
-
-  /** Write [[nearDedupIndex]] id-sorted so [[incrementalNearDedup]]'s
-    * candidate-id scan filter prunes at the parquet row-group level —
-    * the untouched corpus's shingle arrays are never read.
-    */
-  def writeNearDedupIndex(
-      df: DataFrame, textCol: String, idCol: String, path: String,
-      numHashes: Int = 64, shingleSize: Int = 3, seed: Int = 42): Unit =
-    nearDedupIndex(df, textCol, idCol, numHashes, shingleSize, seed)
-      .repartitionByRange(col("id")).sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(path)
 
   /** SimHash near-duplicate pairs: block on 16-bit bands of the 64-bit
     * fingerprint (any pair within Hamming distance 3 shares at least
@@ -799,7 +789,7 @@ object Dedup {
     // instead of ~20-char strings, and the verification intersects long
     // arrays (identical jaccard modulo ~2^-64 hash collisions).
     //
-    // Materialize ([[Materialize]], eager): the plan below reads `sh`
+    // Materialize (eager localCheckpoint): the plan below reads `sh`
     // FOUR times (the inverted index feeds both the frequency cut and
     // the blocked stream, and each verification join-back leg
     // re-evaluates it), so without materialization the corpus is
@@ -808,15 +798,14 @@ object Dedup {
     // ContextCleaner-released once the result frame drops (no
     // CacheManager entry — a .cache() here would pin the shingle table
     // for the session). Same eager-materialization contract as
-    // duplicateClusters. NOTE the failure semantics of the default
-    // localCheckpoint mode: lineage is CUT, so a lost executor makes
-    // the blocks unrecoverable and FAILS the query (it does NOT
-    // recompute) — safe in local mode, a reliability trade on clusters
-    // with decommissioning; set spark.graft.materialize=persist (or
-    // checkpoint) there.
-    val sh = Materialize.frame(
-      df.select(col(idCol).as("id"),
-        shingle_hashes(col(textCol), shingleSize).as("hs")))
+    // duplicateClusters. NOTE the failure semantics of localCheckpoint:
+    // lineage is CUT, so a lost executor makes the blocks
+    // unrecoverable and FAILS the query (it does NOT recompute) — safe
+    // in local mode, a reliability trade on clusters with
+    // decommissioning.
+    val sh = df.select(col(idCol).as("id"),
+        shingle_hashes(col(textCol), shingleSize).as("hs"))
+      .localCheckpoint()
     val inv = sh.select(col("id"), explode(col("hs")).as("shingle"))
     val rare = inv.groupBy("shingle").count().where(col("count") <= maxShingleFreq)
     val blocked = inv.join(rare.select("shingle"), Seq("shingle"))
@@ -1702,7 +1691,7 @@ object Dedup {
       // the checksum action right below both materializes the
       // round and folds the convergence probe in ONE job per
       // round instead of two.
-      val next = Materialize.frameLazy(smallStar(largeStar(edges)))
+      val next = smallStar(largeStar(edges)).localCheckpoint(false)
       val cur = checksum(next)
       edges.unpersist()
       // rounds > 1: the retired frame is a localCheckpoint whose blocks

@@ -135,6 +135,11 @@ object Pipeline {
     val deduped = gated.join(losers, Seq(id), "left_anti").cache()
     val nDeduped = deduped.count()
     stageSecs("cluster_dedup") = (System.nanoTime() - tCc0) / 1e9
+    // labels and deduped are materialized, so nothing reads the pair
+    // table's shingle checkpoint again: release its blocks now. Left to
+    // the ContextCleaner, their release waits behind every cleanup that
+    // a full GC enqueues, which in a long session takes tens of seconds.
+    org.apache.spark.sql.graft.RddBridge.unpersistLocalCheckpoint(pairs)
 
     // 2b. optional repeated-span surgery on the cluster-deduped
     // survivors: doc-level dedup first (it removes whole near-dup

@@ -27,14 +27,7 @@ import org.apache.spark.sql.DataFrame
   */
 object ScanFanout {
 
-  /** Conf key (default true): set false to disable the fan-out
-    * globally — the A/B toggle, and the escape hatch for deployments
-    * whose small inputs are followed by cheap work.
-    */
-  val FanoutKey = "spark.graft.scan.fanout"
-
   private[graft] def fanOutSmallScan(df: DataFrame): DataFrame = {
-    if (!df.sparkSession.conf.get(FanoutKey, "true").toBoolean) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // physical scan partitions (internal-row RDD: no decode, no job)
     val planned = df.queryExecution.toRdd.getNumPartitions

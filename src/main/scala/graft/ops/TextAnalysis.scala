@@ -420,18 +420,18 @@ object TextAnalysis {
         merges += ((step, pair, cnt))
         val from = " " + pair.replace(" ", "  ") + " "
         val to = " " + pair.replace(" ", "") + " "
-        // Materialize truncates the loop-carried lineage: without
+        // localCheckpoint truncates the loop-carried lineage: without
         // it, iteration i re-applies all i-1 prior merges from the
         // cached base and Catalyst re-analyzes an O(i)-deep plan —
         // quadratic over a realistic 30k-merge run. The materialized
         // vocab table is executor-resident and vocabulary-sized.
-        syms = Materialize.frame(syms.select(
+        syms = syms.select(
           trim(regexp_replace(
             replace(
               concat(lit(" "), replace(col("s"), lit(" "), lit("  ")), lit(" ")),
               lit(from), lit(to)),
             "  +", " ")).as("s"),
-          col("wc")))
+          col("wc")).localCheckpoint()
         step += 1
       }
     }

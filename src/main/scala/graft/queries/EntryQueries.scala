@@ -8,7 +8,7 @@ import graft.fixtures.CdcFixture
 import graft.fixtures.CdcFixture.Col
 import graft.functions.GraftFunctions
 import graft.operators._
-import graft.ops.{Asof, Curation, Dedup, Materialize, MediaFixtures, Multimodal, RangeJoin, Sampling, Sessionize, Similarity, Skew, TextAnalysis}
+import graft.ops.{Asof, Curation, Dedup, MediaFixtures, Multimodal, RangeJoin, Sampling, Sessionize, Similarity, Skew, TextAnalysis}
 
 /** The declared query inventory (SURVEY §2.1 Q1–Q10 plus the
   * training-data operators), each expressed through the engine's
@@ -568,17 +568,14 @@ object EntryQueries {
     val docs = T(spark, dir, "documents")
     val merges = TextAnalysis.collectMerges(
       TextAnalysis.bpeLearnMerges(docs, "text", numMerges = 8))
-    // Materialize, NOT cache: budgetSelect scans `scored` three
-    // times (two collect jobs + the selection pass), so materializing
-    // once matters — but a .cache() here pinned a corpus-sized frame in
-    // the CacheManager for the SESSION lifetime per invocation (nothing
-    // could unpersist it after the lazy result left this scope; ×5
-    // under the bench harness). Materialized blocks are instead
-    // released by the ContextCleaner as soon as the result frame drops.
-    val scored = Materialize.frame(fan(docs).select(
+    // budgetSelect scans `scored` three times (two collect jobs + the
+    // selection pass), so materialize it once — localCheckpoint, not
+    // cache (EntryCacheHygieneSpec).
+    val scored = fan(docs).select(
         col("doc_id"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.bpeTokenCount(col("text"), merges).cast("long").as("n_bpe")))
+        TextAnalysis.bpeTokenCount(col("text"), merges).cast("long").as("n_bpe"))
+      .localCheckpoint()
     Sampling.budgetSelect(scored, "quality", "n_bpe", "doc_id", budget = 40000L)
   }
 
@@ -637,14 +634,12 @@ object EntryQueries {
     // its input three times (two collect jobs + the selection pass),
     // and the quality expression is several regex passes per document —
     // the real pipeline shape is score-into-a-table, then select
-    // against it. Materialize, NOT cache: a .cache() pinned the
-    // frame in the CacheManager for the session lifetime per
-    // invocation; materialized blocks are released by the
-    // ContextCleaner once the result frame is dropped.
-    val scored = Materialize.frame(fan(T(spark, dir, "documents")).select(
+    // against it (localCheckpoint, not cache: EntryCacheHygieneSpec).
+    val scored = fan(T(spark, dir, "documents")).select(
         col("doc_id"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")))
+        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
+      .localCheckpoint()
     Sampling.budgetSelect(scored, "quality", "n_tokens", "doc_id", budget = 15000L)
   }
 
@@ -1219,7 +1214,7 @@ object EntryQueries {
     // the cluster-count-sized label set out and release the cache so
     // repeated invocations (the 5-rep bench) don't pin one per call
     val labels = Dedup.duplicateClusters(qDedupNgram(spark, dir))
-    val out = Materialize.frame(labels)
+    val out = labels.localCheckpoint()
     labels.unpersist()
     out
   }
@@ -1251,17 +1246,14 @@ object EntryQueries {
     // scan (measured at sf10: 70-88 s isolated vs ~45 s cached; the
     // historical 27-51 s sweep numbers were the same cache arriving
     // accidentally, from q_dedup_clusters running earlier in the JVM).
-    // Materialize, NOT cache: the old .cache() stayed pinned in the
-    // CacheManager per invocation; materialized blocks are released by
-    // the ContextCleaner when the result frame is dropped.
-    val pairs = Materialize.frame(qDedupNgram(spark, dir))
+    val pairs = qDedupNgram(spark, dir).localCheckpoint()
     val isNew = (col("id_a") + col("id_b")) % 5 === 0
     val existing = Dedup.duplicateClusters(pairs.where(!isNew))
     // label sets are cluster-count-sized; copy out of the ops' caches
     // so the entry can release them (mergeDuplicateClusters keeps two
     // batch-bounded internal caches alive for its lazy result)
-    val out = Materialize.frame(
-      Dedup.mergeDuplicateClusters(existing, pairs.where(isNew)))
+    val out =
+      Dedup.mergeDuplicateClusters(existing, pairs.where(isNew)).localCheckpoint()
     existing.unpersist()
     out
   }
@@ -1408,12 +1400,12 @@ object EntryQueries {
     // Materialize the inline-built history index once: the op reads it
     // twice (banding via sig, verification via hs), and this demo form
     // derives it from the documents scan — left lazy, the history half
-    // is scanned+shingled+minhashed twice per run. The SCALE path
-    // instead reads a persisted [[Dedup.writeNearDedupIndex]] parquet
-    // index, whose two reads stay column-pruned scans — this entry-side
-    // materialization models "the index exists", not a new cost.
-    val idx = Materialize.frame(
-      Dedup.nearDedupIndex(docs.where(col("doc_id") <= split), "text", "doc_id"))
+    // is scanned+shingled+minhashed twice per run. A deployment
+    // instead reads a persisted index, whose two reads stay
+    // column-pruned scans — this entry-side materialization models
+    // "the index exists", not a new cost.
+    val idx = Dedup.nearDedupIndex(docs.where(col("doc_id") <= split), "text", "doc_id")
+      .localCheckpoint()
     Dedup.incrementalNearDedup(
       docs.where(col("doc_id") > split), "text", "doc_id", idx, threshold = 0.2)
   }
@@ -1631,63 +1623,22 @@ object EntryQueries {
     name
   }
 
-  /** Conf key naming a base directory for the streaming entry
-    * queries' checkpoint locations (offsets/commits WAL + state store
-    * deltas — a fresh UUID subdirectory per invocation, deleted when
-    * the query stops, so no state can leak between invocations or
-    * runs). Unset = Spark's managed temp checkpoint under
-    * java.io.tmpdir, which on this sandbox is a spinning-rust ext4 —
-    * the per-micro-batch WAL + 16 state-store commits are pure
-    * filesystem overhead for a demo checkpoint that is DELETED on
-    * stop (`forceDeleteTempCheckpointLocation` semantics), so the
-    * bench harness points it at RAM; a production stream sets a
-    * durable path (the checkpoint is its recovery story).
-    */
-  private val StreamCheckpointDirKey = "spark.graft.stream.checkpointDir"
-
-  /** Fresh single-use checkpoint dir under [[StreamCheckpointDirKey]],
-    * or None (Spark-managed temp) when the conf is unset.
-    */
-  private def freshStreamCheckpoint(
-      spark: SparkSession, sink: String): Option[java.io.File] =
-    spark.conf.getOption(StreamCheckpointDirKey).filter(_.nonEmpty).map { base =>
-      val d = new java.io.File(
-        base, s"$sink-${java.util.UUID.randomUUID().toString.take(8)}")
-      d.mkdirs()
-      d
-    }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val fs = Option(f.listFiles()).getOrElse(Array.empty)
-    fs.foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
-  /** Conf key (default true): feed the streaming demo queries through
-    * [[org.apache.spark.sql.graft.BroadcastMemoryStream]] — each
-    * micro-batch ships as ONE broadcast deserialized once per executor
-    * instead of riding the task binary deserialized by EVERY scan task
-    * (a full-batch payload copy per task × 16 feed partitions × every
-    * micro-batch). `false` restores stock MemoryStream (the A/B
-    * toggle). Same rows, same slicing, same order — the broadcast
-    * variant re-packages the stock partitioning.
-    */
-  private val StreamBroadcastFeedKey = "spark.graft.stream.broadcastFeed"
-  // ids far above MemoryStream's own counter so debug strings of the
-  // two feed kinds can never alias within a session
+  // ids far above MemoryStream's own counter so debug strings never
+  // alias a stock MemoryStream's within a session
   private val broadcastFeedSeq =
     new java.util.concurrent.atomic.AtomicInteger(1 << 20)
 
+  /** Feed for the streaming demo queries: each micro-batch ships as ONE
+    * broadcast deserialized once per executor instead of riding the
+    * task binary deserialized by EVERY scan task (a full-batch payload
+    * copy per task × 16 feed partitions × every micro-batch). Same
+    * rows, same slicing, same order as the stock MemoryStream.
+    */
   private def memFeed[A: org.apache.spark.sql.Encoder](
       spark: SparkSession, parts: Int)
-      : org.apache.spark.sql.execution.streaming.runtime.MemoryStreamBase[A] =
-    if (spark.conf.get(StreamBroadcastFeedKey, "true").toBoolean)
-      new org.apache.spark.sql.graft.BroadcastMemoryStream[A](
-        broadcastFeedSeq.incrementAndGet(), spark, parts)
-    else
-      org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[A](spark, numPartitions = parts)
+      : org.apache.spark.sql.graft.BroadcastMemoryStream[A] =
+    new org.apache.spark.sql.graft.BroadcastMemoryStream[A](
+      broadcastFeedSeq.incrementAndGet(), spark, parts)
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
     * restored after. Streaming state-store count binds to the shuffle
@@ -1732,15 +1683,12 @@ object EntryQueries {
     val mem = memFeed[(Long, String, java.sql.Timestamp)](spark, parts = 16)
     val sink = freshStreamSink(spark, "q_dedup_streaming_lines")
     val base = 1700000000000L
-    val ckpt = freshStreamCheckpoint(spark, sink)
     withStatePartitions(spark, 8) {
-      val w0 = Dedup.streamingSegmentDedup(
+      val q = Dedup.streamingSegmentDedup(
           mem.toDF().toDF("doc_id", "text", "ts"), "text", "doc_id", "ts",
           w = 20, sep = "\n")
         .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-      val q = ckpt.fold(w0)(d =>
-        w0.option("checkpointLocation", d.getAbsolutePath)).start()
+        .outputMode("append").start()
       try {
         val batchSize = math.max(1, (rows.length + 4) / 5)
         rows.grouped(batchSize).foreach { b =>
@@ -1754,7 +1702,6 @@ object EntryQueries {
         q.processAllAvailable()
       } finally {
         q.stop()
-        ckpt.foreach(deleteRecursively)
       }
     }
     spark.table(sink)
@@ -1814,14 +1761,11 @@ object EntryQueries {
     // micro-batch's PNG decode would run on one core
     val mem = memFeed[(Long, Array[Byte], java.sql.Timestamp)](spark, parts = 16)
     val sink = freshStreamSink(spark, "q_dedup_streaming_media")
-    val ckpt = freshStreamCheckpoint(spark, sink)
     withStatePartitions(spark, 8) {
-      val w0 = Multimodal.streamingMediaDedup(
+      val q = Multimodal.streamingMediaDedup(
           mem.toDF().toDF("media_id", "content", "ts"), "image", "ts")
         .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-      val q = ckpt.fold(w0)(d =>
-        w0.option("checkpointLocation", d.getAbsolutePath)).start()
+        .outputMode("append").start()
       try {
         val batchSize = math.max(1, (rows.length + 4) / 5)
         rows.grouped(batchSize).foreach { b =>
@@ -1832,7 +1776,6 @@ object EntryQueries {
         }
       } finally {
         q.stop()
-        ckpt.foreach(deleteRecursively)
       }
     }
     Multimodal.imageDHash(spark.table(sink))
@@ -1894,14 +1837,11 @@ object EntryQueries {
     val mem = memFeed[(Long, Array[Byte], java.sql.Timestamp)](spark, parts = 16)
     val sink = freshStreamSink(spark, "q_dedup_streaming_video")
     val base = 1700000000000L
-    val ckpt = freshStreamCheckpoint(spark, sink)
     withStatePartitions(spark, 8) {
-      val w0 = Multimodal.streamingVideoDedup(
+      val q = Multimodal.streamingVideoDedup(
           mem.toDF().toDF("media_id", "content", "ts"), n = 4, tsCol = "ts")
         .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-      val q = ckpt.fold(w0)(d =>
-        w0.option("checkpointLocation", d.getAbsolutePath)).start()
+        .outputMode("append").start()
       try {
         val batchSize = math.max(1, (rows.length + 4) / 5)
         rows.grouped(batchSize).foreach { b =>
@@ -1916,7 +1856,6 @@ object EntryQueries {
         q.processAllAvailable()
       } finally {
         q.stop()
-        ckpt.foreach(deleteRecursively)
       }
     }
     Multimodal.videoFrameHashes(spark.table(sink), n = 4)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 /** Replication-slot administration (SURVEY §2 O2; reference
   * `pg-bifrost create|drop`, utils/utils.go:38-77) — a driver-side
   * admin action, not a query operator.
@@ -10,27 +8,10 @@ import java.nio.file.{Files, Paths}
   * `CREATE_REPLICATION_SLOT <name> LOGICAL test_decoding` /
   * `DROP_REPLICATION_SLOT <name>` over a replication connection
   * (idempotent on SQLSTATE 42710 like the reference), issued with the
-  * JDBC replication API. Against the segment-directory provider the
-  * "slot" is the directory itself.
+  * JDBC replication API ([[graft.sources.pg.PgSlotAdmin]]).
   */
 trait SlotAdmin {
   /** Idempotent create: returns false if the slot already existed. */
   def createSlot(name: String): Boolean
   def dropSlot(name: String): Unit
-}
-
-/** Segment-directory provider: a slot is a WAL segment directory. */
-final class FileSlotAdmin(baseDir: String) extends SlotAdmin {
-  override def createSlot(name: String): Boolean = {
-    val p = Paths.get(baseDir, name)
-    if (Files.exists(p)) false
-    else { Files.createDirectories(p); true }
-  }
-  override def dropSlot(name: String): Unit = {
-    val p = Paths.get(baseDir, name)
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-    }
-  }
 }

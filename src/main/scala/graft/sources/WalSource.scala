@@ -19,13 +19,16 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DSv2 streaming CDC source (`format("graft-wal")`) — the Spark-native
   * shape of the reference's replication client (SURVEY §2 O1/O4/O16).
   *
-  * Architecture: offsets ARE LSNs. Each micro-batch covers an LSN range;
-  * admission control caps the range per trigger (`maxLinesPerTrigger`,
-  * the analog of the reference's bounded client buffer, U2); offsets are
-  * committed only after the sink write, and `commit(offset)` fires the
-  * ack hook — where a Postgres-backed provider sends
-  * StandbyStatusUpdate, closing the exactly-once loop without any
-  * driver-side ledger (checkpointing provides the contiguity guarantee).
+  * Architecture: offsets are global spool line ordinals (line N is the
+  * Nth line ever spooled, surviving compaction). Each micro-batch covers
+  * a line range; admission control caps the range per trigger
+  * (`maxLinesPerTrigger`, the analog of the reference's bounded client
+  * buffer, U2). A range is committed only after its sink write, and the
+  * next trigger's `latestOffset` acks the committed frontier through
+  * the ack hook — where [[graft.sources.pg.PgWalReceiver]] maps the
+  * line count back to an LSN and sends StandbyStatusUpdate, closing the
+  * exactly-once loop without any driver-side ledger (checkpointing
+  * provides the contiguity guarantee).
   *
   * Transaction stamping (O4) happens in the source, ordered per
   * connection exactly like the reference's single replication reader:
@@ -34,11 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * restarts.
   *
   * The WAL byte stream itself comes from a segment directory (one text
-  * file per segment, lexicographic order = WAL order) — the test/replay
-  * provider. A live `org.postgresql` replication-protocol provider
-  * plugs in behind the same offset/stamping contract; it cannot be
-  * exercised in this environment (no Postgres), the segment provider
-  * is behavior-equivalent for everything downstream.
+  * file per segment, lexicographic order = WAL order). A replay test
+  * writes segments directly; live, [[graft.sources.pg.PgWalReceiver]]
+  * spools the replication stream into the same layout (exercised
+  * against a real server by `LivePgSoakSpec`).
   *
   * Output schema: line, walStart, serverWalEnd, serverTimeMs, txn,
   * timeBasedKey — feed straight into
@@ -64,8 +66,9 @@ object WalSource {
     StructField("txn", StringType),
     StructField("timeBasedKey", StringType)))
 
-  /** Ack hooks keyed by source path — a test/driver registers a
-    * callback to observe committed LSNs (the StandbyStatus edge).
+  /** Ack hooks keyed by source path — the receiver (or a test)
+    * registers a callback that sees each newly committed line count
+    * (the StandbyStatus edge).
     */
   val ackHooks: ConcurrentHashMap[String, Long => Unit] = new ConcurrentHashMap()
 
@@ -195,9 +198,13 @@ object WalSource {
         if (idx + cnt <= from) idx += cnt // whole segment before the range: seek past
         else {
           val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.getLines().foreach { l =>
-            if (idx >= from && idx < until) out += l
-            idx += 1
+          try {
+            val it = src.getLines()
+            while (idx < until && it.hasNext) {
+              val l = it.next()
+              if (idx >= from) out += l
+              idx += 1
+            }
           } finally src.close()
         }
       }
@@ -226,8 +233,21 @@ object WalSource {
   }
 }
 
+/** Transaction stamping state (O4) rolled forward line by line: a
+  * `BEGIN <xid>` line opens a transaction, and every line up to the
+  * next BEGIN carries its txn id and time-based key.
+  */
+private[sources] final class TxnStamp(var txn: String, var tbk: String, epochNanos: Long) {
+  def advance(line: String): Unit =
+    if (line.startsWith("BEGIN ")) {
+      txn = line.substring(6).trim
+      tbk = s"$txn-$epochNanos"
+    }
+}
+
 /** Offset = (lines consumed, current txn, current timeBasedKey): the
-  * stamping state rides with the LSN so it survives restarts.
+  * stamping state rides with the line ordinal so it survives restarts.
+  * The field keeps its checkpoint name `lsn`.
   */
 case class WalOffset(lsn: Long, txn: String, timeBasedKey: String) extends Offset {
   override def json(): String = {
@@ -278,13 +298,26 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
 
+  /** Highest line count handed to the ack hook (monotone guard). */
+  private var lastAcked = 0L
+
   /** Admission control: advance at most `maxRows` lines past `start`,
     * and roll the stamping state forward over the admitted range
     * (driver-side scan of just that slice — the live protocol provider
     * tracks this state for free as it consumes the socket).
+    *
+    * This is also the single ack site. The engine calls it on every
+    * trigger, and only once the batch ending at `start` is in the
+    * commit log (one batch in flight, no async progress tracking), so
+    * `start` is the durably written frontier — acked here even when the
+    * source has gone idle and no next batch is ever constructed.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[WalOffset]
+    if (s.lsn > lastAcked) {
+      lastAcked = s.lsn
+      Option(WalSource.ackHooks.get(path)).foreach(_(s.lsn))
+    }
     val total = WalSource.countLines(path)
     val end = limit match {
       case rl: streaming.ReadMaxRows => math.min(total, s.lsn + rl.maxRows())
@@ -292,15 +325,9 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
     }
     if (end == s.lsn) s
     else {
-      var txn = s.txn
-      var tbk = s.timeBasedKey
-      WalSource.readLines(path, s.lsn, end).foreach { l =>
-        if (l.startsWith("BEGIN ")) {
-          txn = l.substring(6).trim
-          tbk = s"$txn-$epochNanos"
-        }
-      }
-      WalOffset(end, txn, tbk)
+      val stamp = new TxnStamp(s.txn, s.timeBasedKey, epochNanos)
+      WalSource.readLines(path, s.lsn, end).foreach(stamp.advance)
+      WalOffset(end, stamp.txn, stamp.tbk)
     }
   }
 
@@ -318,14 +345,11 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
 
   override def deserializeOffset(json: String): Offset = WalOffset.fromJson(json)
 
-  /** Offsets are committed only after the micro-batch's writes are
-    * durable → this is the contiguous-prefix ack (O15/O16 without a
-    * ledger). A live provider sends StandbyStatusUpdate(lsn) here.
+  /** The engine calls this only while constructing the NEXT batch, so
+    * it never fires for the last batch before an idle spell; acks go
+    * out from [[latestOffset]] instead.
     */
-  override def commit(end: Offset): Unit = {
-    val lsn = end.asInstanceOf[WalOffset].lsn
-    Option(WalSource.ackHooks.get(path)).foreach(_(lsn))
-  }
+  override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }
@@ -340,21 +364,17 @@ class WalReaderFactory extends PartitionReaderFactory {
     new PartitionReader[InternalRow] {
       private val lines = WalSource.readLines(p.path, p.from, p.until).iterator
       private var lsn = p.from
-      private var txn = p.startTxn
-      private var tbk = p.startTbk
+      private val stamp = new TxnStamp(p.startTxn, p.startTbk, p.epochNanos)
       private var current: InternalRow = _
 
       override def next(): Boolean = {
         if (!lines.hasNext) return false
         val l = lines.next()
         lsn += 1
-        if (l.startsWith("BEGIN ")) {
-          txn = l.substring(6).trim
-          tbk = s"$txn-${p.epochNanos}"
-        }
+        stamp.advance(l)
         current = new GenericInternalRow(Array[Any](
           UTF8String.fromString(l), lsn, lsn, 0L,
-          UTF8String.fromString(txn), UTF8String.fromString(tbk)))
+          UTF8String.fromString(stamp.txn), UTF8String.fromString(stamp.tbk)))
         true
       }
       override def get(): InternalRow = current

@@ -78,17 +78,9 @@ object CdcPipeline {
     else marshalled
   }
 
-  /** File-based line source: behavior-equivalent stand-in for the
-    * replication client while a DSv2 CDC source is not wired (SURVEY §7
-    * step 3) — each text file is a WAL segment of raw lines.
-    */
-  def fromTextFiles(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.option("maxFilesPerTrigger", 16).text(path)
-      .withColumnRenamed("value", "line")
-
-  /** The DSv2 CDC source ([[graft.sources.WalSourceProvider]]): LSN
-    * offsets, source-side txn stamping, per-trigger admission control,
-    * commit→ack. Rows feed [[transform]] directly.
+  /** The DSv2 CDC source ([[graft.sources.WalSourceProvider]]): line
+    * ordinal offsets, source-side txn stamping, per-trigger admission
+    * control, commit→ack. Rows feed [[transform]] directly.
     */
   def fromWalSource(spark: SparkSession, path: String,
                     maxLinesPerTrigger: Option[Int] = None,

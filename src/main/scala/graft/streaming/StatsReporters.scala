@@ -1,19 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Stats reporters (SURVEY §2 S1; reference stats/reporters/{stdout,datadog}).
   *
-  * Two layers, mirroring the reference:
-  *  - pipeline metrics (rows/sec, batch durations) come for free from
-  *    Spark's StreamingQueryProgress — [[ProgressStatsReporter]] prints
-  *    them in the reference's stdout-reporter shape;
-  *  - data-derived stats (the windowed aggregates from
-  *    [[graft.operators.StatsAggregator]]) are emitted per micro-batch
-  *    via [[reportAggregates]] with a pluggable emit function — the
-  *    statsd/Datadog client drops in behind the same signature.
+  * Data-derived stats (the windowed aggregates from
+  * [[graft.operators.StatsAggregator]]) are emitted per micro-batch via
+  * [[reportStatsd]] with a pluggable send function; the on-demand
+  * progress dump prints in the reference's stdout-reporter shape.
   */
 object StatsReporters {
 
@@ -21,16 +15,6 @@ object StatsReporters {
     * stats/reporters/stdout/stdout.go:41-66.
     */
   def stdoutEmit(line: String): Unit = println(s"[graft-stats] $line")
-
-  /** foreachBatch hook for an aggregated stats stream. */
-  def reportAggregates(emit: String => Unit = stdoutEmit)
-      : (DataFrame, Long) => Unit = (batch, _) =>
-    batch.collect().foreach { r =>
-      emit(s"${r.getAs[String]("component")}.${r.getAs[String]("statName")} " +
-        s"type=${r.getAs[String]("statType")} unit=${r.getAs[String]("unit")} " +
-        s"window=${r.getAs[java.sql.Timestamp]("windowStart")} " +
-        s"total=${r.getAs[Long]("total")} samples=${r.getAs[Long]("samples")}")
-    }
 
   /** Dogstatsd wire line for one stat, the reference's Datadog mapping
     * (datadog/datadog.go:62-69): metric name
@@ -94,18 +78,4 @@ object StatsReporters {
         (_: sun.misc.Signal) => dump())
       true
     } catch { case _: Throwable => false }
-
-  /** Engine-level throughput reporter from query progress events. */
-  final class ProgressStatsReporter(emit: String => Unit = stdoutEmit)
-    extends StreamingQueryListener {
-    override def onQueryStarted(event: QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
-    override def onQueryIdle(event: QueryIdleEvent): Unit = ()
-    override def onQueryProgress(event: QueryProgressEvent): Unit = {
-      val p = event.progress
-      emit(s"pipeline.rows type=count unit=rows/s value=${p.processedRowsPerSecond}")
-      emit(s"pipeline.batch_duration type=histogram unit=ms " +
-        s"value=${p.durationMs.getOrDefault("triggerExecution", 0L)}")
-    }
-  }
 }

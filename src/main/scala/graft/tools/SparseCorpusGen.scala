@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Builds the span-SPARSE documents corpus the winnow-prefilter A/B
   * needs as its win-case arm: the amplified bench corpora are
-  * duplicate-saturated (SpanDensityProbe: ≥94% of docs are winnow
+  * duplicate-saturated (SCALE.md r18: ≥94% of docs are winnow
   * candidates at every scale, ~99.9% at sf10), so the prefilter's
   * guard correctly bails there and only its overhead is measurable.
   * Real pretraining corpora after upstream dedup sit at the other

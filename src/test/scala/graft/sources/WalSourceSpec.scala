@@ -37,6 +37,16 @@ class WalSourceSpec extends AnyFunSuite {
     writeSegment(dir, "001.wal", Seq("d", "e", "f"))
     assert(WalSource.countLines(dir) == 6)
     assert(WalSource.readLines(dir, 4, 6) == Seq("e", "f"))
+
+    // ranges at the start, middle and end of one large segment equal
+    // the matching slices of the full read
+    val big = Files.createTempDirectory("graft_wal_big").toString
+    writeSegment(big, "000.wal", (0 until 30000).map(i => s"l$i"))
+    val full = WalSource.readLines(big, 0, 30000)
+    assert(full.length == 30000)
+    for ((from, until) <- Seq((0L, 10000L), (10000L, 20000L), (20000L, 30000L)))
+      assert(WalSource.readLines(big, from, until) ==
+        full.slice(from.toInt, until.toInt))
   }
 
   test("wal source: LSN offsets, txn stamping across batches, commit acks") {
@@ -74,8 +84,8 @@ class WalSourceSpec extends AnyFunSuite {
       assert(rows.map(_.getLong(3)).sorted.toSeq == (1L to 7L))
       // partition key = txn
       assert(byOp("UPDATE").head.getString(4) == "701")
-      // commits fire per completed batch, one batch behind (Spark
-      // commits batch N's offset as batch N+1 starts) — a contiguous
+      // acks fire from the trigger after a batch commits (the source's
+      // latestOffset sees the committed frontier) — a contiguous
       // prefix of the stream is acked, never more than written
       assert(acks.synchronized(acks.nonEmpty))
       assert(acks.synchronized(acks.max) >= 3L && acks.synchronized(acks.max) <= 7L)
@@ -90,6 +100,42 @@ class WalSourceSpec extends AnyFunSuite {
       val rows2 = spark.table("wal_test").collect()
       assert(rows2.length == 10)
       assert(acks.synchronized(acks.max) >= 7L)
+    } finally {
+      q.stop()
+      WalSource.ackHooks.remove(dir)
+    }
+  }
+
+  test("idle source: the last committed batch is acked with no new data") {
+    val dir = Files.createTempDirectory("graft_wal_idle").toString
+    writeSegment(dir, "000.wal", Seq(
+      "BEGIN 800",
+      "table public.users: INSERT: id[integer]:1 name[text]:'a'",
+      "COMMIT 800",
+      "BEGIN 801",
+      "table public.users: INSERT: id[integer]:2 name[text]:'b'",
+      "COMMIT 801",
+      "BEGIN 802",
+      "table public.users: DELETE: id[integer]:1",
+      "COMMIT 802"))
+    val total = WalSource.countLines(dir)
+
+    val acks = new ArrayBuffer[Long]()
+    WalSource.ackHooks.put(dir, lsn => acks.synchronized { acks += lsn })
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(4))
+    val q = CdcPipeline.transform(src, CdcConfig())
+      .writeStream.format("memory").queryName("wal_idle_ack")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      // drained: no line is ever added again, yet the final batch's
+      // end (the last COMMIT) must still reach the ack hook
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while (acks.synchronized(acks.lastOption) != Some(total) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      val seen = acks.synchronized(acks.toSeq)
+      assert(seen.lastOption.contains(total), s"acks $seen never reached $total")
+      assert(seen == seen.distinct.sorted, s"acks not strictly monotone: $seen")
     } finally {
       q.stop()
       WalSource.ackHooks.remove(dir)
