@@ -40,8 +40,7 @@ case class BloomMightContain(child: Expression, bf: BloomFilter)
   * sibling, probing with `mightContainLong` — the encoding
   * `DataFrameStatFunctions.bloomFilter` uses when building from an
   * integral column (so build and probe agree bit-for-bit). Used by the
-  * span family's count-first rare-gram prefilter over 64-bit gram
-  * hashes.
+  * winnow prefilter's over-cap count pass over 64-bit gram hashes.
   */
 case class BloomMightContainLong(child: Expression, bf: BloomFilter)
   extends UnaryExpression {

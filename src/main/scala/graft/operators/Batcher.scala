@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Byte-capped greedy chunking (5 MiB Kinesis / 1 MiB record) is
   * inherently sequential per key and lives in the sink writers
-  * ([[graft.streaming.ChunkingSink]]), same place the reference does it.
+  * ([[graft.streaming.ChunkedSink]]), same place the reference does it.
   */
 object Batcher {
 

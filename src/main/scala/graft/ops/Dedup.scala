@@ -916,68 +916,6 @@ object Dedup {
     //    sorts while everything fits in memory (~2× at sf0.1). The
     //    collect_list is memory-safe only BECAUSE it runs after the
     //    frequency filter (≤ maxGramFreq entries per group).
-    // Count-first rare-gram prefilter (conf, default off): before the
-    // posting shuffle, one cheap pass ships ONLY the 8-byte gram hash
-    // through a primitive-codegen count aggregation, the surviving
-    // in-band hash set becomes a driver-built Bloom filter (no false
-    // negatives), and the posting pass filters the gram stream against
-    // it BEFORE its exchange — the vast singleton majority (and the
-    // over-cap boilerplate) never enters the expensive object
-    // aggregate's shuffle/sort/spill. Exactness is unconditional: a
-    // true in-band gram always passes (no false negatives ⇒ the
-    // aggregate sees every one of its postings), and a false positive
-    // re-counts inside the aggregate and evaluates NULL exactly as
-    // today. Costs: the gram stream is COMPUTED twice (scan + shingle
-    // + hash — cheap, 15.6 % of CPU in the sf10 profile) and the
-    // filter build is an eager job at construction time.
-    //
-    // Driver-memory guard: the Bloom lives on the driver and is
-    // broadcast to every task (~1.2 bytes/gram at fpp 0.01), so a
-    // pathologically duplicate-heavy 100 TB corpus could surface
-    // billions of in-band grams — past `prefilterMaxGrams` the build
-    // switches to a fully distributed left-semi join on the hash
-    // (same no-false-negative exactness, zero FALSE positives, one
-    // extra shuffle of the 8-byte surviving-hash set instead of a
-    // driver array). The guard costs nothing extra: the count already
-    // runs to size the Bloom.
-    //
-    // CONTRACT (conf-on path only): the input's lineage must be
-    // DETERMINISTIC. The gram stream is recomputed in two separate jobs
-    // (the construction-time count/Bloom build and the execution-time
-    // posting pass); a non-deterministic source — sample() without a
-    // seed, a limit over a shuffle, rand()-derived text — can diverge
-    // between them, and a gram that was in-band at count time but
-    // absent at posting time silently breaks the no-false-negative
-    // guarantee. Checkpointing the gram stream would remove the
-    // requirement but re-introduces the materialization cost the
-    // prefilter exists to avoid. Note also the behavior change: with
-    // the conf on, building the DataFrame runs EAGER Spark jobs
-    // (count + Bloom construction) before any action on the result.
-    def countPrefilter(base: DataFrame): DataFrame =
-      if (!df.sparkSession.conf.get(SpanCountPrefilterKey, "false").toBoolean) base
-      else {
-        val inBand = gramStream.select(col("g.h").as("h"))
-          .groupBy("h").agg(count(lit(1)).as("c"))
-          .where(col("c") >= 2 && col("c") <= maxGramFreq)
-          .select("h")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val n = inBand.count()
-          val maxGrams = df.sparkSession.conf
-            .get(SpanPrefilterMaxGramsKey, SpanPrefilterMaxGramsDefault.toString).toLong
-          if (n <= maxGrams) {
-            val bf = inBand.stat.bloomFilter("h", math.max(1L, n), 0.01)
-            base.where(column(graft.functions.BloomMightContainLong(
-              expression(col("h")), bf)))
-          } else
-            // Lazy join against the UNPERSISTED frame: the surviving
-            // set re-aggregates at execution time (the persist above is
-            // released in `finally` — the construction-time count was
-            // its only owned consumer, and holding caller-visible cache
-            // entries would break the no-retention contract).
-            base.join(inBand, Seq("h"), "left_semi")
-        } finally inBand.unpersist()
-      }
     val posts = resolveSpanStrategy(df, textCol, idCol, strategy) match {
       case SpanIndexBounded
           if df.sparkSession.conf.get(SpanPackedPostingsKey, "true").toBoolean =>
@@ -988,17 +926,17 @@ object Dedup {
         // at 8 bytes instead of 12. pack_id_pos fails loudly on ids ≥
         // 2^34 (see its scaladoc); the conf routes full-range ids to
         // the unpacked branch below.
-        countPrefilter(blockedGuard(gramStream
+        blockedGuard(gramStream
           .select(column(graft.functions.PackIdPos(
               expression(col("id")), expression(col("g.pos")))).as("p"),
-            col("g.h").as("h"))))
+            col("g.h").as("h")))
           .groupBy("h")
           .agg(column(graft.functions.BoundedPostingList(
               expression(col("p")), maxGramFreq, minSize = 2)
             .toAggregateExpression()).as("ps"))
           .where(col("ps").isNotNull)
       case SpanIndexBounded =>
-        countPrefilter(blockedGuard(g))
+        blockedGuard(g)
           .groupBy("h")
           .agg(column(graft.functions.BoundedPostingList(
               expression(struct(col("id"), col("pos"))), maxGramFreq, minSize = 2)
@@ -1080,37 +1018,6 @@ object Dedup {
     */
   val SpanPackedPostingsKey = "spark.graft.span.packedPostings"
 
-  /** Conf key (default `false`): bounded-strategy count-first rare-gram
-    * prefilter — a hash-only count pass + Bloom membership filter keeps
-    * out-of-band grams (the singleton majority) out of the posting
-    * shuffle entirely, at the price of computing the gram stream twice
-    * and an eager filter-build job at construction time. Result-
-    * identical by construction (no false negatives; false positives
-    * re-band inside the aggregate). Like the other span confs, resolved
-    * at DataFrame-construction time.
-    *
-    * ADJUDICATED REJECT (PREFILTER_AB_r16.json): measured slower at
-    * every scale and memory regime — sf1 base 21.7/25.7 s vs prefilter
-    * 29.8/38.2 s; sf10 off-heap base 282.2/329.0 s vs prefilter
-    * 353.4/479.2 s. The gram-stream recompute plus eager Bloom-build
-    * jobs cost more than the shuffle reduction saves (postings are
-    * already bounded), and both sides scale with corpus size, so no
-    * crossover exists at 100 TB. Kept default-off as a measurement
-    * hook; the distributed left-semi fallback below remains the design
-    * of record for any future regime where a prefilter is mandatory
-    * for driver-memory reasons rather than speed.
-    */
-  val SpanCountPrefilterKey = "spark.graft.span.countPrefilter"
-
-  /** Conf key (default 100 M): largest surviving in-band gram set the
-    * prefilter will hold as a driver-built Bloom (~120 MB broadcast at
-    * the default). Above it the prefilter switches to a distributed
-    * left-semi join on the gram hash — same exactness, no driver-side
-    * state proportional to corpus duplication.
-    */
-  val SpanPrefilterMaxGramsKey = "spark.graft.span.prefilterMaxGrams"
-  val SpanPrefilterMaxGramsDefault: Long = 100000000L
-
   /** Conf key (default `false`): winnowed anchor prefilter for
     * [[repeatedSpans]] — gate the expensive posting index to CANDIDATE
     * documents found by a winnowing fingerprint pass (Schleimer et
@@ -1152,7 +1059,7 @@ object Dedup {
     * larger sparse sets fall back to a lazy semi-join whose lineage
     * recomputes the anchor pass (≤ 2×) at execution.
     *
-    * CONTRACT (conf-on path only), same as [[SpanCountPrefilterKey]]:
+    * CONTRACT (conf-on path only):
     * the input's lineage must be DETERMINISTIC — phase 0 and phase 1
     * evaluate it in separate jobs — and building the DataFrame runs
     * EAGER Spark jobs (the winnow pass + candidate counts).

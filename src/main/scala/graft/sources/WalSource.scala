@@ -36,11 +36,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ride in the offset, so stamping survives micro-batch boundaries and
   * restarts.
   *
-  * The WAL byte stream itself comes from a segment directory (one text
-  * file per segment, lexicographic order = WAL order). A replay test
-  * writes segments directly; live, [[graft.sources.pg.PgWalReceiver]]
-  * spools the replication stream into the same layout (exercised
-  * against a real server by `LivePgSoakSpec`).
+  * The WAL byte stream itself comes from a spool directory whose format
+  * the [[WalSource]] object owns: segments named by their global start
+  * line, each with an optional LSN sidecar. A replay test or the
+  * benchmark writes segments directly; live,
+  * [[graft.sources.pg.PgWalReceiver]] spools the replication stream into
+  * the same layout (exercised against a real server by `LivePgSoakSpec`).
   *
   * Output schema: line, walStart, serverWalEnd, serverTimeMs, txn,
   * timeBasedKey — feed straight into
@@ -72,62 +73,67 @@ object WalSource {
     */
   val ackHooks: ConcurrentHashMap[String, Long => Unit] = new ConcurrentHashMap()
 
-  def segmentFiles(path: String): Seq[java.io.File] = {
-    val d = new java.io.File(path)
-    // Hadoop convention: dot/underscore files are metadata, not data —
-    // the receiver's .wal.idx sidecar lives in the same directory.
-    Option(d.listFiles())
-      .map(_.filter(f => f.isFile &&
-        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-        .sortBy(_.getName).toSeq)
-      .getOrElse(Nil)
+  /** One spool segment. A spool is a directory of text segments named
+    * by the global line their first line has (`%012d.wal`, at least 12
+    * digits, ordered by that number), so offsets stay global when the
+    * receiver compacts segments away from the front: line N keeps
+    * meaning "the Nth line ever spooled". A closed segment holds exactly
+    * the lines up to the next segment's start; only the tail is counted.
+    * Dot-prefixed files are metadata, never data.
+    */
+  final case class Segment(start: Long, file: java.io.File) {
+    /** `.<segment>.lsn`: one [[LsnRecordBytes]] big-endian walStart per
+      * line of the segment, written by the receiver beside each line.
+      */
+    def sidecar: java.io.File =
+      new java.io.File(file.getParentFile, s".${file.getName}.lsn")
   }
 
-  /** Lines compacted away from the front of the spool. The receiver's
-    * compactor deletes fully-acked segments and records the count of
-    * dropped lines as a `@<decimal>` header on `.wal.idx` (written
-    * atomically with the trimmed index, so the two can never disagree).
-    * Offsets stay global: line N keeps meaning "the Nth line ever
-    * spooled" even after the first N-1 were compacted, so checkpointed
-    * offsets survive compaction unchanged. 0 when no idx / no header.
+  val LsnRecordBytes = 8
+
+  def segmentName(start: Long): String = f"$start%012d.wal"
+
+  def lsnRecord(walStart: Long): Array[Byte] =
+    java.nio.ByteBuffer.allocate(LsnRecordBytes).putLong(walStart).array()
+
+  /** The walStart of global line `line`, read from its segment's sidecar. */
+  def walStartAt(seg: Segment, line: Long): Long = {
+    val raf = new java.io.RandomAccessFile(seg.sidecar, "r")
+    try { raf.seek((line - seg.start) * LsnRecordBytes); raf.readLong() }
+    finally raf.close()
+  }
+
+  private val SegmentName = """(\d{12,})\.wal""".r
+
+  private def listFiles(path: String): Seq[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+
+  /** The spool's segments in line order. Any file that is neither
+    * dot-prefixed nor named by a start line is refused: counting it in
+    * name order would shift every offset after it.
     */
-  def compactedBase(path: String): Long = {
-    val f = new java.io.File(path, ".wal.idx")
-    if (!f.exists()) return 0L
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(new java.io.FileInputStream(f), "UTF-8"))
-    try {
-      val first = in.readLine()
-      if (first != null && first.startsWith("@"))
-        try java.lang.Long.parseLong(first.substring(1).trim) catch {
-          case _: NumberFormatException => 0L
+  def segments(path: String): IndexedSeq[Segment] =
+    listFiles(path).iterator.filter(f => f.isFile && !f.getName.startsWith("."))
+      .map { f =>
+        f.getName match {
+          case SegmentName(digits) => Segment(java.lang.Long.parseLong(digits), f)
+          case n => throw new IllegalStateException(
+            s"spool $path holds $n, which is not a segment named by its start line " +
+              "(%012d.wal); move it out of the spool")
         }
-      else 0L
-    } finally in.close()
-  }
+      }.toIndexedSeq.sortBy(_.start)
 
-  /** Global start line encoded in a receiver-written segment name
-    * (`%012d.wal`); None for foreign names (offset math then falls back
-    * to cumulative order, the pre-compaction behavior). At least 12
-    * digits — `%012d` PADS to 12 but grows beyond once the global line
-    * count passes 10^12, and rejecting the longer form would silently
-    * disable the stale-base anchoring exactly at scale. Shorter numeric
-    * names (a test's `001.wal`) are sequence numbers, not start lines —
-    * anchoring on them would corrupt offsets.
+  /** Sidecars whose segment is gone: a compaction deletes the data
+    * first, so a crash between its two deletes leaves one behind.
     */
-  def segmentStartLine(f: java.io.File): Option[Long] = {
-    val n = f.getName
-    val dot = n.indexOf('.')
-    val digits = if (dot >= 0) n.substring(0, dot) else n
-    if (digits.length >= 12 && digits.forall(_.isDigit))
-      try Some(java.lang.Long.parseLong(digits)) catch { case _: NumberFormatException => None }
-    else None
+  def orphanSidecars(path: String): Seq[java.io.File] = {
+    val live = segments(path).map(_.sidecar.getName).toSet
+    listFiles(path).filter(f => f.getName.endsWith(".wal.lsn") && !live(f.getName))
   }
 
-  /** Retry wrapper for reads racing the receiver's compactor: the
-    * compactor publishes the new base (atomic idx replace) BEFORE
-    * deleting segments, so a reader that lists a segment and then finds
-    * it deleted just re-reads against the now-consistent state.
+  /** Retry wrapper for reads racing the receiver's compactor: a reader
+    * that listed a segment and then finds it deleted re-lists, and a
+    * range that now starts below the first segment fails as compacted.
     */
   private def retryOnVanish[A](body: => A): A = {
     var attempt = 0
@@ -142,94 +148,58 @@ object WalSource {
     sys.error("unreachable")
   }
 
-  /** Per-file line counts keyed by (path, size, mtime): closed segments
-    * are immutable so one scan each suffices; a still-growing tail
-    * segment changes size (or mtime) and re-scans. Keeps the driver's
-    * per-trigger work O(new lines) instead of O(total lines) over the
-    * stream's life. LRU-bounded so long-lived drivers streaming many
-    * spool dirs don't accumulate entries for deleted files forever.
+  /** ((path, size, mtime), lines) of the last tail counted: a trigger
+    * that finds no new data re-counts nothing.
     */
-  private val lineCountCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long, Long)](64, 0.75f, true) {
-        // Sized so a full sequential sweep of a large spool still fits
-        // (a 65k-segment stream is ~5 MB of cache; an access-order LRU
-        // smaller than the sweep would thrash to a 0% hit rate). Long
-        // captures should compact segments before approaching this.
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long, Long)]): Boolean = size() > 65536
-      })
+  @volatile private var tailMemo = (("", -1L, -1L), 0L)
 
-  def fileLineCount(f: java.io.File): Long = {
-    val key = f.getAbsolutePath
-    val size = f.length()
-    val mtime = f.lastModified()
-    val cached = lineCountCache.get(key)
-    if (cached != null && cached._1 == size && cached._2 == mtime) cached._3
+  private def tailLineCount(f: java.io.File): Long = {
+    val key = (f.getAbsolutePath, f.length(), f.lastModified())
+    val memo = tailMemo
+    if (memo._1 == key) memo._2
     else {
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val n = try src.getLines().size.toLong finally src.close()
-      lineCountCache.put(key, (size, mtime, n))
+      tailMemo = (key, n)
       n
     }
   }
 
   def readLines(path: String, from: Long, until: Long): Seq[String] = retryOnVanish {
-    val base = compactedBase(path)
-    if (from < base && from < until)
-      throw new IllegalStateException(
-        s"offset $from precedes the compacted base $base of spool $path: " +
-          "those lines were acked and removed; restart from a checkpoint at or past the base")
     val out = mutable.ArrayBuffer[String]()
-    var idx = base
-    segmentFiles(path).foreach { f =>
-      // a segment wholly below the base is a compaction leftover (crash
-      // between idx replace and delete) — its lines are already counted
-      // by the base, skip it
-      if (idx < until && !segmentStartLine(f).exists(s => base > 0 && s < base)) {
-        // Receiver-named segments encode their global start line: anchor
-        // idx there instead of trusting cumulative arithmetic. This makes
-        // the walk immune to the compactor race where the base advances
-        // (idx replaced, segments deleted) between our compactedBase read
-        // and the listing — with a stale base, cumulative counting would
-        // silently shift every offset by the newly-compacted line count.
-        segmentStartLine(f).foreach(s => idx = s)
-        val cnt = fileLineCount(f)
-        if (idx + cnt <= from) idx += cnt // whole segment before the range: seek past
-        else {
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try {
-            val it = src.getLines()
-            while (idx < until && it.hasNext) {
-              val l = it.next()
-              if (idx >= from) out += l
-              idx += 1
-            }
-          } finally src.close()
+    val segs = if (from < until) segments(path) else IndexedSeq.empty
+    if (segs.nonEmpty && from < segs.head.start)
+      throw new IllegalStateException(
+        s"offset $from precedes the compacted base ${segs.head.start} of spool $path: " +
+          "those lines were acked and removed; restart from a checkpoint at or past the base")
+    var i = segs.lastIndexWhere(_.start <= from)
+    while (i >= 0 && i < segs.length && segs(i).start < until) {
+      val seg = segs(i)
+      val closed = i + 1 < segs.length
+      val end = if (closed) segs(i + 1).start else Long.MaxValue
+      val src = scala.io.Source.fromFile(seg.file, "UTF-8")
+      try {
+        val it = src.getLines()
+        var n = seg.start
+        while (n < until && n < end && it.hasNext) {
+          val l = it.next()
+          if (n >= from) out += l
+          n += 1
         }
-      }
+        // a read that passes through a closed segment checks that it
+        // holds exactly the lines its name and the next one's promise
+        if (closed && n < until && (n < end || it.hasNext))
+          throw new IllegalStateException(
+            s"segment ${seg.file.getName} of spool $path does not hold exactly lines " +
+              s"[${seg.start}, $end), as its name and the next segment's name promise")
+      } finally src.close()
+      i += 1
     }
     out.toSeq
   }
 
   def countLines(path: String): Long = retryOnVanish {
-    val base = compactedBase(path)
-    // Same stale-base TOCTOU defense as readLines: receiver-named
-    // segments anchor the running total at their encoded END line
-    // (start + count) — max-combined, so the result is independent of
-    // listing order (a 13-digit name sorts lexicographically before
-    // 12-digit ones past 10^12) and a base that advanced after we read
-    // it cannot deflate the count.
-    var total = base
-    segmentFiles(path)
-      .filterNot(f => segmentStartLine(f).exists(s => base > 0 && s < base))
-      .foreach { f =>
-        segmentStartLine(f) match {
-          case Some(s) => total = math.max(total, s + fileLineCount(f))
-          case None    => total += fileLineCount(f)
-        }
-      }
-    total
+    segments(path).lastOption.fold(0L)(t => t.start + tailLineCount(t.file))
   }
 }
 

@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.sources.WalSource
 
 /** Bridges the live replication socket to the `graft-wal` DSv2 source:
@@ -19,13 +17,14 @@ import graft.sources.WalSource
   *
   *   socket → spool segments → DSv2 micro-batches → sink
   *      ▲                                            │
-  *      └── StandbyStatusUpdate ◀── commit(offset) ──┘
+  *      └── StandbyStatusUpdate ◀── latestOffset ────┘
   *
   * The spool doubles as the reference's bounded client buffer (U2) —
   * but durable, so a restart replays from the checkpointed offset
-  * instead of forcing a slot rewind. A `wal.idx` sidecar records each
-  * line's walStart (one hex per line); on restart it is reloaded so
-  * acks for lines spooled by a previous run still translate.
+  * instead of forcing a slot rewind. Each segment's sidecar
+  * ([[graft.sources.WalSource.Segment.sidecar]]) records each line's
+  * walStart, so acks for lines spooled by a previous run still
+  * translate; the receiver itself keeps no per-line state.
   */
 final class PgWalReceiver(
     clientFactory: () => PgReplicationClient,
@@ -40,20 +39,16 @@ final class PgWalReceiver(
   def this(client: PgReplicationClient, spoolDir: String, linesPerSegment: Int) =
     this(() => client, spoolDir, linesPerSegment, 0)
 
-  // walStarts holds lines [base, base + size): line (base + i) → walStarts(i).
-  // `base` counts lines compacted away from the front; it is persisted as
-  // the idx header (`@<base>`, WalSource.compactedBase) so offsets stay
-  // global across restarts. Guarded (with `base`) by walStarts.synchronized.
-  private val walStarts = ArrayBuffer[Long]()
-  private var base = 0L
+  // Lines compacted away from the front: the first segment's start.
+  @volatile private var base = 0L
   private val spooled = new AtomicLong(0L)
   private val ackedLines = new AtomicLong(0L)
-  // Serializes segment/idx file mutation: spool() appends (receiver
-  // thread) vs compact() rewriting the idx and deleting segments (ack
-  // thread) vs stop() closing the writers.
+  // Serializes spool file mutation and sidecar reads: spool() appends
+  // (receiver thread) vs ackLines()/compact() reading sidecars and
+  // deleting segments (ack thread) vs stop() closing the writers.
   private val spoolLock = new Object
   private var writer: java.io.FileOutputStream = _
-  private var idxWriter: java.io.FileOutputStream = _
+  private var lsnWriter: java.io.FileOutputStream = _
   private var linesInSegment = 0
   private var thread: Thread = _
   private val started = new CountDownLatch(1)
@@ -65,154 +60,57 @@ final class PgWalReceiver(
   @volatile var recoveries: Int = 0
 
   Files.createDirectories(Paths.get(spoolDir))
-  // Recover the line→LSN index left by a previous receiver session.
-  // Dot-prefixed so the segment source never mistakes it for WAL data;
-  // a spool written before the rename is migrated on sight.
-  private val idxFile = new File(spoolDir, ".wal.idx")
   locally {
-    val legacy = new File(spoolDir, "wal.idx")
-    if (legacy.exists() && !idxFile.exists()) {
-      if (!legacy.renameTo(idxFile)) {
-        // rename denied (e.g. cross-device): copy, then the original
-        // MUST go away or the segment source would read it as WAL data
-        Files.copy(legacy.toPath, idxFile.toPath)
-        if (!legacy.delete())
-          throw new IllegalStateException(
-            s"cannot migrate legacy index $legacy: delete failed; remove it manually")
-      }
-    } else if (legacy.exists()) {
-      // both present (old receiver ran after the rename): ambiguous
+    val idx = new File(spoolDir, ".wal.idx")
+    if (idx.exists())
       throw new IllegalStateException(
-        s"both $legacy and $idxFile exist; reconcile the spool manually")
-    }
-  }
-  // --- torn-write recovery ---
-  // spool() appends the data line and its idx entry as two independent
-  // writes with no ordering barrier between the streams; a crash can
-  // leave either file with a trailing line missing its newline (a torn
-  // line that an append-mode reopen would silently extend into a
-  // valid-looking but WRONG entry — e.g. a truncated hex LSN that
-  // later translates an ack past undelivered data), or the data spool
-  // one line ahead of the idx. Repair on startup: truncate each file
-  // to its last complete line, then trim both streams to the shorter.
-  // Trimmed lines were never ack-translatable, so the slot never
-  // advanced past them — the server redelivers after reconnect (the
-  // same at-least-once window the reference's error recovery accepts,
-  // replication/client/client.go:386-424).
-  locally {
-    truncateTornTail(idxFile)
-    if (idxFile.exists()) {
-      val src = scala.io.Source.fromFile(idxFile, "UTF-8")
-      val allValid =
-        try {
-          var first = true
-          src.getLines().forall { l =>
-            val isHeader = first && l.startsWith("@")
-            first = false
-            if (isHeader) {
-              // compaction header: lines dropped from the front. Written
-              // only by the atomic rewriteIdx, so it is never torn.
-              base = java.lang.Long.parseLong(l.substring(1).trim); true
-            } else
-              try { walStarts += java.lang.Long.parseLong(l.trim, 16); true }
-              catch { case _: NumberFormatException => false }
-          }
-        } finally src.close()
-      if (!allValid) rewriteIdx() // keep only the valid prefix
-    }
-    // Reconcile a crash between the compactor's idx replace and its
-    // segment deletes: any segment wholly below the base is already
-    // accounted for by the header — remove the leftover.
-    val segs = WalSource.segmentFiles(spoolDir).filter { f =>
-      val start = WalSource.segmentStartLine(f)
-      if (base > 0 && start.exists(_ < base)) {
-        if (start.exists(s => s + WalSource.fileLineCount(f) > base))
-          throw new IllegalStateException(
-            s"segment $f straddles the compacted base $base; reconcile the spool manually")
-        if (!f.delete())
-          throw new IllegalStateException(s"cannot remove compacted leftover segment $f")
-        false
-      } else true
-    }
-    segs.lastOption.foreach(truncateTornTail) // only the newest can be torn
-    val dataLines = segs.map(WalSource.fileLineCount).sum
-    if (walStarts.size > dataLines) {
-      walStarts.remove(dataLines.toInt, walStarts.size - dataLines.toInt)
-      rewriteIdx()
-    } else if (dataLines > walStarts.size) {
-      truncateDataTo(segs, walStarts.size.toLong)
-    }
-    spooled.set(base + walStarts.size)
+        s"$idx belongs to an older spool format (one global line index); this receiver " +
+          "reads per-segment .lsn sidecars and would find none. Drain the spool with the " +
+          "build that wrote it, then start on an empty --spool-dir")
+    WalSource.orphanSidecars(spoolDir).foreach(f => if (!f.delete())
+      throw new IllegalStateException(s"cannot remove leftover sidecar $f"))
+    val segs = WalSource.segments(spoolDir)
+    base = segs.headOption.fold(0L)(_.start)
+    spooled.set(segs.lastOption.fold(0L)(t => t.start + repairNewest(t)))
     ackedLines.set(base) // everything below the base was acked pre-compaction
   }
 
-  /** Drop a trailing line that is missing its newline (torn write). */
-  private def truncateTornTail(f: File): Unit = {
-    if (!f.exists() || f.length() == 0) return
-    val raf = new java.io.RandomAccessFile(f, "rw")
-    try {
-      raf.seek(raf.length() - 1)
-      if (raf.read() == '\n') return
-      var pos = raf.length() - 1
-      var cut = 0L
-      while (cut == 0L && pos > 0) {
-        pos -= 1
-        raf.seek(pos)
-        if (raf.read() == '\n') cut = pos + 1
-      }
-      raf.setLength(cut)
-    } finally raf.close()
+  /** Torn-write recovery for the newest (data, sidecar) pair, the only
+    * one a crash mid-`spool()` can leave inconsistent. The line and its
+    * 8-byte record are two independent appends, so either file can end
+    * in a torn fragment (a data line missing its newline, or a partial
+    * record an append-mode reopen would extend into a WRONG walStart
+    * that acks past undelivered data), or the data can run one line
+    * ahead. Both are cut to their common complete prefix. Trimmed lines
+    * were never ack-translatable, so the slot never advanced past them;
+    * the server redelivers after reconnect (the at-least-once window the
+    * reference's error recovery accepts, replication/client/
+    * client.go:386-424).
+    *
+    * @return lines the segment keeps
+    */
+  private def repairNewest(seg: WalSource.Segment): Long = {
+    val bytes = Files.readAllBytes(seg.file.toPath)
+    val lineEnds = bytes.indices.filter(bytes(_) == '\n')
+    val records =
+      if (seg.sidecar.exists()) seg.sidecar.length() / WalSource.LsnRecordBytes else 0L
+    val keep = math.min(lineEnds.length.toLong, records)
+    setLength(seg.file, if (keep == 0) 0L else lineEnds(keep.toInt - 1) + 1L)
+    if (seg.sidecar.exists()) setLength(seg.sidecar, keep * WalSource.LsnRecordBytes)
+    keep
   }
 
-  /** Atomically replace the idx with the current `walStarts` prefix
-    * (plus the `@base` compaction header once any compaction happened —
-    * header and entries land in ONE atomic move, so the base and the
-    * entry list can never disagree after a crash).
-    */
-  private def rewriteIdx(): Unit = {
-    val tmp = new File(spoolDir, ".wal.idx.tmp")
-    val w = new java.io.FileOutputStream(tmp)
-    try {
-      if (base > 0) w.write(s"@$base\n".getBytes("UTF-8"))
-      walStarts.foreach(ws =>
-        w.write((java.lang.Long.toHexString(ws) + "\n").getBytes("UTF-8")))
-    } finally w.close()
-    Files.move(tmp.toPath, idxFile.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Trim the data spool to its first `keep` lines (drop the unindexed
-    * tail; segments are bounded by `linesPerSegment`, so reading one
-    * whole segment to find the cut point is cheap).
-    */
-  private def truncateDataTo(segs: Seq[File], keep: Long): Unit = {
-    var before = 0L
-    segs.foreach { f =>
-      val n = WalSource.fileLineCount(f)
-      if (before >= keep) {
-        if (!f.delete())
-          throw new IllegalStateException(s"cannot remove surplus segment $f")
-      } else if (before + n > keep) {
-        val bytes = Files.readAllBytes(f.toPath)
-        var lines = 0L
-        var pos = 0
-        while (lines < keep - before && pos < bytes.length) {
-          if (bytes(pos) == '\n') lines += 1
-          pos += 1
-        }
-        val raf = new java.io.RandomAccessFile(f, "rw")
-        try raf.setLength(pos.toLong) finally raf.close()
-      }
-      before += n
+  private def setLength(f: File, len: Long): Unit =
+    if (f.length() != len) {
+      val raf = new java.io.RandomAccessFile(f, "rw")
+      try raf.setLength(len) finally raf.close()
     }
-  }
 
   /** Lines spooled so far (existing + this session), compacted included. */
   def linesSpooled: Long = spooled.get()
 
   /** Lines compacted away from the front of the spool. */
-  def compactedLines: Long = walStarts.synchronized(base)
+  def compactedLines: Long = base
 
   /** Unacked backlog: lines spooled but not yet committed by the sink —
     * the reference's queue depth (the bounded client buffer's fill).
@@ -224,75 +122,61 @@ final class PgWalReceiver(
     * forward it to the socket's standby-status sender.
     */
   def ackLines(lineLsn: Long): Unit = {
-    // translate under ONE lock so a concurrent compact() can't shift
-    // `base` between the clamp and the lookup
-    val translated = walStarts.synchronized {
-      val idx = math.min(lineLsn, base + walStarts.size) - 1
-      if (idx >= base) Some((idx, walStarts((idx - base).toInt))) else None
-      // idx < base: an ack for already-compacted lines (a replayed ack
-      // after restart) — the slot is already at or past it, nothing to send
+    // look up under the spool lock so a concurrent compact() can't
+    // delete the sidecar between the base check and the read
+    val translated = spoolLock.synchronized {
+      val last = math.min(lineLsn, spooled.get()) - 1
+      // last < base: an ack for already-compacted lines (a replayed ack
+      // after restart) — the slot is already at or past it
+      if (last < base) None
+      else {
+        val seg = WalSource.segments(spoolDir).findLast(_.start <= last).get
+        Some((last, WalSource.walStartAt(seg, last)))
+      }
     }
-    translated.foreach { case (idx, walLsn) =>
+    translated.foreach { case (last, walLsn) =>
       // before start() the ack is parked on a fresh client and carried
       // by the first status update once the loop begins
       if (client == null) synchronized { if (client == null) client = clientFactory() }
       client.updateAckLsn(walLsn)
-      ackedLines.getAndAccumulate(idx + 1, math.max)
+      ackedLines.getAndAccumulate(last + 1, math.max)
       // opportunistic compaction once a configured number of segments'
       // worth of lines is fully acked beyond the current base
       if (compactAfterSegments > 0 &&
-          ackedLines.get() - compactedLines >= compactAfterSegments.toLong * linesPerSegment)
+          ackedLines.get() - base >= compactAfterSegments.toLong * linesPerSegment)
         compact()
     }
   }
 
-  /** Drop fully-acked whole segments from the front of the spool and
-    * fold their line count into the idx `@base` header — the bounded-
-    * disk guarantee for a long-running receiver (SCALE.md's "compactable
-    * line→LSN index", reference analog: Postgres itself recycling WAL
-    * below the slot's restart_lsn).
+  /** Drop fully-acked (data, sidecar) pairs from the front of the spool —
+    * the bounded-disk guarantee for a long-running receiver (SCALE.md;
+    * reference analog: Postgres itself recycling WAL below the slot's
+    * restart_lsn). A segment is fully acked once the next one starts at
+    * or below the acked frontier; the newest is never deleted, so
+    * `WalSource.countLines` keeps its meaning on an idle, fully-acked
+    * spool. Offsets stay global: the new base is the surviving first
+    * segment's name.
     *
-    * Crash-safe ordering: the trimmed idx (entries + new base in one
-    * atomic move) is published BEFORE any segment is deleted; a crash in
-    * between leaves leftover segments wholly below the base, which
-    * startup reconciliation (and WalSource's readers) recognize by their
-    * filename-encoded start line and drop. The newest segment is never
-    * deleted, so `WalSource.countLines` keeps its meaning on an idle,
-    * fully-acked spool.
+    * Data goes before its sidecar, so a crash between the two deletes
+    * leaves only a sidecar with no segment, which startup removes.
     *
     * @return lines compacted away by this call
     */
   def compact(): Long = spoolLock.synchronized {
     val acked = ackedLines.get()
-    val segs = WalSource.segmentFiles(spoolDir)
-    if (segs.size <= 1) return 0L
-    var cum = walStarts.synchronized(base)
-    val deletable = ArrayBuffer[File]()
-    var scanning = true
-    segs.init.foreach { f => // never the newest (possibly open) segment
-      if (scanning) {
-        val n = WalSource.fileLineCount(f)
-        if (cum + n <= acked) { deletable += f; cum += n } else scanning = false
+    val segs = WalSource.segments(spoolDir)
+    val gone = segs.zip(segs.drop(1)).takeWhile(_._2.start <= acked)
+    gone.foreach { case (seg, _) =>
+      Seq(seg.file, seg.sidecar).foreach { f =>
+        if (!f.delete() && f.exists())
+          throw new IllegalStateException(s"cannot remove compacted file $f")
       }
     }
-    if (deletable.isEmpty) return 0L
-    val dropped = walStarts.synchronized {
-      val d = cum - base
-      walStarts.remove(0, d.toInt)
-      base = cum
-      d
+    gone.lastOption.fold(0L) { case (_, first) =>
+      val dropped = first.start - base
+      base = first.start
+      dropped
     }
-    // publish the new base atomically with the trimmed entries, pausing
-    // the appender so the rewrite can't race a concurrent spool()
-    val reopen = idxWriter != null
-    if (reopen) idxWriter.close()
-    rewriteIdx()
-    if (reopen) idxWriter = new java.io.FileOutputStream(idxFile, true)
-    deletable.foreach { f =>
-      if (!f.delete())
-        throw new IllegalStateException(s"cannot remove compacted segment $f")
-    }
-    dropped
   }
 
   /** Register this receiver as the ack hook for its spool directory. */
@@ -301,10 +185,11 @@ final class PgWalReceiver(
 
   private def rollIfNeeded(): Unit = {
     if (writer == null || linesInSegment >= linesPerSegment) {
-      if (writer != null) writer.close()
-      val startLine = spooled.get()
-      writer = new java.io.FileOutputStream(
-        new File(spoolDir, f"$startLine%012d.wal"), true)
+      if (writer != null) { writer.close(); lsnWriter.close() }
+      val seg = WalSource.Segment(spooled.get(),
+        new File(spoolDir, WalSource.segmentName(spooled.get())))
+      writer = new java.io.FileOutputStream(seg.file, true)
+      lsnWriter = new java.io.FileOutputStream(seg.sidecar, true)
       linesInSegment = 0
     }
   }
@@ -314,13 +199,12 @@ final class PgWalReceiver(
     // reader polls these files concurrently, and a buffered writer
     // could expose a half-flushed line as a complete one. A single
     // write of the whole record into the page cache is the strongest
-    // line-level atomicity a plain file offers. spoolLock keeps the
-    // appends out from under a concurrent compact()'s idx rewrite.
+    // line-level atomicity a plain file offers. The line is counted
+    // only once its sidecar record is written too.
     spoolLock.synchronized {
       rollIfNeeded()
       writer.write((x.line + "\n").getBytes("UTF-8"))
-      idxWriter.write((java.lang.Long.toHexString(x.walStart) + "\n").getBytes("UTF-8"))
-      walStarts.synchronized { walStarts += x.walStart }
+      lsnWriter.write(WalSource.lsnRecord(x.walStart))
       spooled.incrementAndGet()
       linesInSegment += 1
     }
@@ -339,7 +223,6 @@ final class PgWalReceiver(
     */
   def start(slot: String, startLsn: Long = 0L,
             pluginOptions: Seq[(String, String)] = Nil): Unit = {
-    idxWriter = new java.io.FileOutputStream(idxFile, true)
     registerAckHook()
     thread = new Thread(() => {
       var lsn = startLsn
@@ -418,18 +301,9 @@ final class PgWalReceiver(
     // shutdown (replication/client/conn/manager.go Close path).
     if (client != null) { try client.close() catch { case _: Throwable => () } }
     spoolLock.synchronized {
-      if (writer != null) { writer.close(); writer = null }
-      if (idxWriter != null) { idxWriter.close(); idxWriter = null }
+      if (writer != null) { writer.close(); lsnWriter.close(); writer = null }
     }
     WalSource.ackHooks.remove(spoolDir)
     if (failure != null) throw failure
   }
-}
-
-/** [[graft.sources.SlotAdmin]] over the live replication connection —
-  * the reference's `pg-bifrost create|drop` (utils/utils.go:38-77).
-  */
-final class PgSlotAdmin(client: PgReplicationClient) extends graft.sources.SlotAdmin {
-  override def createSlot(name: String): Boolean = client.createSlot(name)
-  override def dropSlot(name: String): Unit = client.dropSlot(name)
 }

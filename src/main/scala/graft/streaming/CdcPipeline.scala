@@ -24,8 +24,8 @@ final case class CdcConfig(
 /** The Structured-Streaming CDC pipeline: raw `test_decoding` lines →
   * parse → filter → partition-key → marshal → sink, with micro-batch
   * cadence standing in for the reference's flush ages and Spark
-  * checkpointing + the ack listener standing in for the ledger
-  * (SURVEY §3.1, §7).
+  * checkpointing standing in for the ledger: the source's
+  * `latestOffset` acks the committed frontier (SURVEY §3.1, §7).
   *
   * The whole stateless middle is ONE Catalyst pipeline — parse, filter,
   * key and JSON-render fuse into a single whole-stage-codegen loop per

@@ -38,7 +38,7 @@ class KnobInventorySpec extends AnyFunSuite {
   test("the spark.graft.* keys read in src/main are exactly the README Knobs table") {
     val inCode = mainSources.flatMap { case (_, s) =>
       KeyLiteral.findAllMatchIn(s).map(_.group(1)) }.toSet
-    assert(readmeRows.size == 13, s"README Knobs table rows: ${readmeRows.keys.toSeq.sorted}")
+    assert(readmeRows.size == 11, s"README Knobs table rows: ${readmeRows.keys.toSeq.sorted}")
     assert(inCode == readmeRows.keySet,
       s"only in code: ${(inCode -- readmeRows.keySet).toSeq.sorted}; " +
         s"only in README: ${(readmeRows.keySet -- inCode).toSeq.sorted}")

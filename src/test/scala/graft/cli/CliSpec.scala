@@ -233,15 +233,12 @@ class CliSpec extends AnyFunSuite {
       assert(Main.run(c, Some(() => TestSpark.spark)) == 0)
 
       // 4 lines / 2-line segments: commits acked everything, so the
-      // fully-acked leading segment was compacted away (the newest is
-      // always kept) and the idx carries the crash-safe @base header
-      val segs = new java.io.File(spool).listFiles()
-        .filter(_.getName.endsWith(".wal")).map(_.getName).sorted
-      assert(!segs.contains("000000000000.wal"), s"segments left: ${segs.mkString(",")}")
-      assert(segs.nonEmpty)
-      val idx = new String(Files.readAllBytes(
-        java.nio.file.Paths.get(spool, ".wal.idx")), "UTF-8")
-      assert(idx.startsWith("@"), s"idx missing base header:\n$idx")
+      // fully-acked leading segment and its sidecar were compacted away
+      // (the newest is always kept); the survivors keep their sidecars
+      val segs = graft.sources.WalSource.segments(spool)
+      assert(segs.nonEmpty && segs.head.start > 0, s"segments left: ${segs.map(_.file.getName)}")
+      assert(!new java.io.File(spool, ".000000000000.wal.lsn").exists())
+      assert(segs.forall(_.sidecar.exists()))
       // acks still translated to real server LSNs after compaction
       assert(awaitTrue()(!srv.acks.isEmpty))
       assert(srv.acks.asScala.forall(a => a == 0L || lines.map(_._1).contains(a)))

@@ -24,30 +24,19 @@ class SpanBruteForceSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  /** (label, strategy, packedPostings, countPrefilter, maxGrams): all
-    * physical layouts — window, bounded with packed 8-byte postings
-    * (the default), bounded with the full-range unpacked struct
-    * layout, bounded with the count-first Bloom prefilter, and bounded
-    * with the prefilter's over-cardinality semi-join fallback
-    * (maxGrams=0 forces it) — must be result-identical everywhere.
+  /** (label, strategy, packedPostings): all physical layouts — window,
+    * bounded with packed 8-byte postings (the default), and bounded
+    * with the full-range unpacked struct layout — must be
+    * result-identical everywhere.
     */
   private val variants = Seq(
-    ("window", Dedup.SpanIndexWindow, true, false, None),
-    ("bounded-packed", Dedup.SpanIndexBounded, true, false, None),
-    ("bounded-unpacked", Dedup.SpanIndexBounded, false, false, None),
-    ("bounded-prefilter", Dedup.SpanIndexBounded, true, true, None),
-    ("bounded-prefilter-semijoin", Dedup.SpanIndexBounded, true, true, Some(0L)))
+    ("window", Dedup.SpanIndexWindow, true),
+    ("bounded-packed", Dedup.SpanIndexBounded, true),
+    ("bounded-unpacked", Dedup.SpanIndexBounded, false))
 
-  private def withPacked[A](packed: Boolean, prefilter: Boolean = false,
-                            maxGrams: Option[Long] = None)(f: => A): A = {
+  private def withPacked[A](packed: Boolean)(f: => A): A = {
     spark.conf.set(Dedup.SpanPackedPostingsKey, packed.toString)
-    spark.conf.set(Dedup.SpanCountPrefilterKey, prefilter.toString)
-    maxGrams.foreach(m => spark.conf.set(Dedup.SpanPrefilterMaxGramsKey, m.toString))
-    try f finally {
-      spark.conf.unset(Dedup.SpanPackedPostingsKey)
-      spark.conf.unset(Dedup.SpanCountPrefilterKey)
-      spark.conf.unset(Dedup.SpanPrefilterMaxGramsKey)
-    }
+    try f finally spark.conf.unset(Dedup.SpanPackedPostingsKey)
   }
 
   /** Reference spans over already-normalized strings: grams with total
@@ -154,13 +143,13 @@ class SpanBruteForceSpec extends AnyFunSuite {
 
   test("repeatedSpans + dropRepeatedSpans match the direct reference on random corpora") {
     val k = 4; val minLen = 9; val maxFreq = 12
-    for (seed <- Seq(1, 2, 3); (label, strategy, packed, prefilter, maxGrams) <- variants) {
+    for (seed <- Seq(1, 2, 3); (label, strategy, packed) <- variants) {
       val docs = corpus(seed, 10).toDF("doc_id", "text").repartition(5)
       val norm = docs.select(col("doc_id"),
         TextAnalysis.normalize(col("text")).as("n"))
         .as[(Long, String)].collect().toMap
 
-      val got = withPacked(packed, prefilter, maxGrams) {
+      val got = withPacked(packed) {
         Dedup.repeatedSpans(docs, "text", "doc_id", k, minLen, maxFreq,
           strategy = strategy)
       }.as[(Long, Long, Int, Int, Long)].collect().toSet
@@ -168,7 +157,7 @@ class SpanBruteForceSpec extends AnyFunSuite {
       assert(got == want, s"seed=$seed variant=$label")
       assert(want.nonEmpty, s"seed=$seed planted no spans — fixture too weak")
 
-      val gotCut = withPacked(packed, prefilter, maxGrams) {
+      val gotCut = withPacked(packed) {
         Dedup.dropRepeatedSpans(docs, "text", "doc_id", k, minLen, maxFreq,
           strategy = strategy)
       }.select("doc_id", "text_deduped").as[(Long, String)].collect().toMap
@@ -234,7 +223,7 @@ class SpanBruteForceSpec extends AnyFunSuite {
 
   test("preserveRaw: cuts land on the original text; uncut docs come back byte-identical") {
     val k = 4; val minLen = 9; val maxFreq = 12
-    for (seed <- Seq(21, 22); (label, strategy, packed, prefilter, maxGrams) <- variants) {
+    for (seed <- Seq(21, 22); (label, strategy, packed) <- variants) {
       val rnd = new scala.util.Random(seed * 1000)
       val raws = corpus(seed, 10).map { case (id, s) => (id, decorate(s, rnd)) }
       val docs = raws.toDF("doc_id", "text").repartition(5)
@@ -244,7 +233,7 @@ class SpanBruteForceSpec extends AnyFunSuite {
       val want = refSpans(norm, k, minLen, maxFreq)
       assert(want.nonEmpty, s"seed=$seed planted no spans — fixture too weak")
 
-      val gotCut = withPacked(packed, prefilter, maxGrams) {
+      val gotCut = withPacked(packed) {
         Dedup.dropRepeatedSpans(docs, "text", "doc_id", k, minLen, maxFreq,
           strategy = strategy, preserveRaw = true)
       }.select("doc_id", "text_deduped").as[(Long, String)].collect().toMap
@@ -265,13 +254,13 @@ class SpanBruteForceSpec extends AnyFunSuite {
 
   test("includeSelf: within-document repeats match the reference, and surgery keeps only the first occurrence") {
     val k = 4; val minLen = 9; val maxFreq = 12
-    for (seed <- Seq(11, 12, 13); (label, strategy, packed, prefilter, maxGrams) <- variants) {
+    for (seed <- Seq(11, 12, 13); (label, strategy, packed) <- variants) {
       val docs = corpus(seed, 8, allowSelf = true).toDF("doc_id", "text").repartition(5)
       val norm = docs.select(col("doc_id"),
         TextAnalysis.normalize(col("text")).as("n"))
         .as[(Long, String)].collect().toMap
 
-      val got = withPacked(packed, prefilter, maxGrams) {
+      val got = withPacked(packed) {
         Dedup.repeatedSpans(docs, "text", "doc_id", k, minLen, maxFreq,
           includeSelf = true, strategy = strategy)
       }.as[(Long, Long, Int, Int, Long)].collect().toSet
@@ -282,7 +271,7 @@ class SpanBruteForceSpec extends AnyFunSuite {
       // every self row pairs an earlier occurrence with a later one
       assert(selfRows.forall(r => r._3 < r._4), "self rows must have start_a < start_b")
 
-      val gotCut = withPacked(packed, prefilter, maxGrams) {
+      val gotCut = withPacked(packed) {
         Dedup.dropRepeatedSpans(docs, "text", "doc_id", k, minLen, maxFreq,
           includeSelf = true, strategy = strategy)
       }.select("doc_id", "text_deduped").as[(Long, String)].collect().toMap

@@ -30,18 +30,18 @@ class WalSourceSpec extends AnyFunSuite {
 
   test("segment line counts are cached by (path,size); readLines skips closed segments") {
     val dir = Files.createTempDirectory("graft_wal_cache").toString
-    writeSegment(dir, "000.wal", Seq("a", "b", "c"))
-    writeSegment(dir, "001.wal", Seq("d", "e"))
+    writeSegment(dir, "000000000000.wal", Seq("a", "b", "c"))
+    writeSegment(dir, "000000000003.wal", Seq("d", "e"))
     assert(WalSource.countLines(dir) == 5)
     // tail segment grows → size changes → recount sees the new line
-    writeSegment(dir, "001.wal", Seq("d", "e", "f"))
+    writeSegment(dir, "000000000003.wal", Seq("d", "e", "f"))
     assert(WalSource.countLines(dir) == 6)
     assert(WalSource.readLines(dir, 4, 6) == Seq("e", "f"))
 
     // ranges at the start, middle and end of one large segment equal
     // the matching slices of the full read
     val big = Files.createTempDirectory("graft_wal_big").toString
-    writeSegment(big, "000.wal", (0 until 30000).map(i => s"l$i"))
+    writeSegment(big, "000000000000.wal", (0 until 30000).map(i => s"l$i"))
     val full = WalSource.readLines(big, 0, 30000)
     assert(full.length == 30000)
     for ((from, until) <- Seq((0L, 10000L), (10000L, 20000L), (20000L, 30000L)))
@@ -49,9 +49,41 @@ class WalSourceSpec extends AnyFunSuite {
         full.slice(from.toInt, until.toInt))
   }
 
+  test("a non-dot file whose name is not a start line is refused") {
+    val dir = Files.createTempDirectory("graft_wal_foreign").toString
+    writeSegment(dir, "000000000000.wal", Seq("a", "b"))
+    // a sequence-numbered name: counting it in name order would put
+    // its lines at offsets no writer gave them
+    writeSegment(dir, "001.wal", Seq("c"))
+    for (read <- Seq(() => WalSource.countLines(dir), () => WalSource.readLines(dir, 0, 2))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("001.wal"), e.getMessage)
+    }
+    // dot-prefixed files are metadata and stay invisible
+    Files.move(java.nio.file.Paths.get(dir, "001.wal"), java.nio.file.Paths.get(dir, ".001.wal"))
+    assert(WalSource.countLines(dir) == 2)
+    assert(WalSource.readLines(dir, 0, 2) == Seq("a", "b"))
+  }
+
+  test("a closed segment whose line count differs from the next start minus its own is refused") {
+    // the first segment promises lines [0, 3) but holds 4, or 2
+    for (first <- Seq(Seq("a", "b", "c", "x"), Seq("a", "b"))) {
+      val dir = Files.createTempDirectory("graft_wal_miscount").toString
+      writeSegment(dir, "000000000000.wal", first)
+      writeSegment(dir, "000000000003.wal", Seq("d", "e"))
+      // only the tail is counted, and a read inside the segment's
+      // promised range cannot see the fault
+      assert(WalSource.countLines(dir) == 5)
+      assert(WalSource.readLines(dir, 0, 2) == Seq("a", "b"))
+      // a read that passes through it can
+      val e = intercept[IllegalStateException](WalSource.readLines(dir, 1, 5))
+      assert(e.getMessage.contains("000000000000.wal"), e.getMessage)
+    }
+  }
+
   test("wal source: LSN offsets, txn stamping across batches, commit acks") {
     val dir = Files.createTempDirectory("graft_wal").toString
-    writeSegment(dir, "000.wal", Seq(
+    writeSegment(dir, "000000000000.wal", Seq(
       "BEGIN 700",
       "table public.users: INSERT: id[integer]:1 name[text]:'a'",
       "table public.users: INSERT: id[integer]:2 name[text]:'b'",
@@ -92,7 +124,7 @@ class WalSourceSpec extends AnyFunSuite {
       assert(acks.synchronized(acks.toSeq) == acks.synchronized(acks.toSeq.sorted))
 
       // new segment arrives → source picks it up, stamping continues
-      writeSegment(dir, "001.wal", Seq(
+      writeSegment(dir, "000000000007.wal", Seq(
         "BEGIN 702",
         "table public.users: DELETE: id[integer]:2",
         "COMMIT 702"))
@@ -108,7 +140,7 @@ class WalSourceSpec extends AnyFunSuite {
 
   test("idle source: the last committed batch is acked with no new data") {
     val dir = Files.createTempDirectory("graft_wal_idle").toString
-    writeSegment(dir, "000.wal", Seq(
+    writeSegment(dir, "000000000000.wal", Seq(
       "BEGIN 800",
       "table public.users: INSERT: id[integer]:1 name[text]:'a'",
       "COMMIT 800",

@@ -174,8 +174,8 @@ class LivePgSoakSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def spoolLines(dir: String): Seq[String] =
-    WalSource.segmentFiles(dir).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
+    WalSource.segments(dir).flatMap { s =>
+      val src = scala.io.Source.fromFile(s.file, "UTF-8")
       try src.getLines().toVector finally src.close()
     }
 

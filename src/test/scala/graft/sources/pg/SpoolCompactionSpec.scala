@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.WalSource
 
 /** Spool compaction: a long-running receiver bounds disk by deleting
-  * fully-acked whole segments and folding their line count into the idx
-  * `@base` header. Offsets stay global (line N keeps meaning "the Nth
-  * line ever spooled"), so checkpointed restarts replay correctly from
-  * any offset at or past the base.
+  * fully-acked (segment, sidecar) pairs from the front. Segments are
+  * named by their global start line, so offsets stay global (line N
+  * keeps meaning "the Nth line ever spooled") and checkpointed restarts
+  * replay correctly from any offset at or past the first segment.
   */
 class SpoolCompactionSpec extends AnyFunSuite {
 
@@ -22,41 +22,40 @@ class SpoolCompactionSpec extends AnyFunSuite {
   private def dir(): String =
     Files.createTempDirectory("graft_spool_compact").toString
 
-  private def write(d: String, name: String, content: String): Unit =
-    Files.write(Paths.get(d, name), content.getBytes("UTF-8"),
+  private def write(d: String, name: String, bytes: Array[Byte]): Unit =
+    Files.write(Paths.get(d, name), bytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
 
-  private def readFile(d: String, name: String): String =
-    new String(Files.readAllBytes(Paths.get(d, name)), "UTF-8")
+  private def seg(d: String, start: Int): WalSource.Segment =
+    WalSource.Segment(start, new File(d, WalSource.segmentName(start)))
 
-  /** 5 receiver-named segments x 10 lines, idx entry i = 0x1000 + 16i. */
-  private def spool50(d: String): Unit = {
-    (0 until 5).foreach { s =>
-      val body = (0 until 10).map(i => s"line ${s * 10 + i}\n").mkString
-      write(d, f"${s * 10}%012d.wal", body)
+  /** `n` receiver-named segments x 10 lines with sidecars, line i
+    * recorded at walStart 0x1000 + 16i.
+    */
+  private def spool(d: String, n: Int = 5): Unit =
+    (0 until n).map(s => seg(d, s * 10)).foreach { g =>
+      val lines = g.start.toInt until g.start.toInt + 10
+      write(d, g.file.getName, lines.map(i => s"line $i\n").mkString.getBytes("UTF-8"))
+      write(d, g.sidecar.getName,
+        lines.toArray.flatMap(i => WalSource.lsnRecord(0x1000L + i * 0x10L)))
     }
-    write(d, ".wal.idx",
-      (0 until 50).map(i => java.lang.Long.toHexString(0x1000L + i * 0x10L) + "\n").mkString)
-  }
 
   test("acked whole segments are compacted; base persisted; offsets stay global") {
     val d = dir()
-    spool50(d)
+    spool(d)
     val c = client()
     val r = new PgWalReceiver(() => c, d, 10, 0, 2)
     r.ackLines(35) // 35 acked lines >= 2 segments' worth -> auto-compact
     assert(c.currentAckLsn == 0x1000L + 34 * 0x10L)
 
     assert(r.compactedLines == 30) // segments 0..2 fully below 35
-    assert(!new File(d, f"${0}%012d.wal").exists())
-    assert(!new File(d, f"${10}%012d.wal").exists())
-    assert(!new File(d, f"${20}%012d.wal").exists())
-    assert(new File(d, f"${30}%012d.wal").exists())
-    assert(readFile(d, ".wal.idx").startsWith("@30\n"))
-    assert(readFile(d, ".wal.idx").linesIterator.size == 21) // header + 20 entries
+    for (s <- Seq(0, 10, 20))
+      assert(!seg(d, s).file.exists() && !seg(d, s).sidecar.exists(), s"segment $s")
+    assert(seg(d, 30).file.exists() && seg(d, 30).sidecar.exists())
+    // the base is the first surviving segment's name
+    assert(WalSource.segments(d).head.start == 30)
 
     // the source's global arithmetic is unchanged by compaction
-    assert(WalSource.compactedBase(d) == 30)
     assert(WalSource.countLines(d) == 50)
     assert(WalSource.readLines(d, 30, 50) == (30 until 50).map(i => s"line $i"))
     assert(WalSource.readLines(d, 42, 44) == Seq("line 42", "line 43"))
@@ -72,7 +71,7 @@ class SpoolCompactionSpec extends AnyFunSuite {
 
   test("restart on a compacted spool recovers the base and keeps translating") {
     val d = dir()
-    spool50(d)
+    spool(d)
     val c1 = client()
     new PgWalReceiver(() => c1, d, 10, 0, 2).ackLines(35)
 
@@ -89,69 +88,31 @@ class SpoolCompactionSpec extends AnyFunSuite {
     assert(c3.currentAckLsn == 0L)
   }
 
-  test("crash between idx publish and segment delete: leftovers reconciled") {
+  test("crash between a compaction's data and sidecar deletes: leftovers reconciled") {
     val d = dir()
-    // idx already carries @20, but segments 0 and 10 were not yet deleted
-    (0 until 5).foreach { s =>
-      val body = (0 until 10).map(i => s"line ${s * 10 + i}\n").mkString
-      write(d, f"${s * 10}%012d.wal", body)
-    }
-    write(d, ".wal.idx", "@20\n" +
-      (20 until 50).map(i => java.lang.Long.toHexString(0x1000L + i * 0x10L) + "\n").mkString)
+    // segments 0 and 10 lost their data, but not yet their sidecars
+    spool(d)
+    assert(seg(d, 0).file.delete() && seg(d, 10).file.delete())
 
-    // readers already skip the stale segments (base published first)
+    // readers see only segments: the base is already 20
     assert(WalSource.countLines(d) == 50)
     assert(WalSource.readLines(d, 20, 22) == Seq("line 20", "line 21"))
 
     val r = new PgWalReceiver(client(), d)
-    assert(!new File(d, f"${0}%012d.wal").exists())
-    assert(!new File(d, f"${10}%012d.wal").exists())
-    assert(new File(d, f"${20}%012d.wal").exists())
+    assert(!seg(d, 0).sidecar.exists())
+    assert(!seg(d, 10).sidecar.exists())
+    assert(seg(d, 20).file.exists() && seg(d, 20).sidecar.exists())
     assert(r.linesSpooled == 50)
     assert(r.compactedLines == 20)
   }
 
-  test("stale-base reader race: offsets anchor to segment names, not the old base") {
-    val d = dir()
-    // The reader-side TOCTOU: a reader loads .wal.idx (base 10), then the
-    // compactor publishes @20 and deletes segment 10 BEFORE the reader
-    // lists the directory. The reader's snapshot is base=10 + segments
-    // {20,30,40} — cumulative arithmetic from the stale base would shift
-    // every offset down by 10. Simulate exactly that snapshot on disk.
-    (2 until 5).foreach { s =>
-      write(d, f"${s * 10}%012d.wal", (0 until 10).map(i => s"line ${s * 10 + i}\n").mkString)
-    }
-    write(d, ".wal.idx", "@10\n" +
-      (20 until 50).map(i => java.lang.Long.toHexString(0x1000L + i * 0x10L) + "\n").mkString)
-
-    // name-anchored arithmetic: the count and every read window are the
-    // same as they would be under the up-to-date base
-    assert(WalSource.countLines(d) == 50)
-    assert(WalSource.readLines(d, 20, 22) == Seq("line 20", "line 21"))
-    assert(WalSource.readLines(d, 25, 27) == Seq("line 25", "line 26"))
-    assert(WalSource.readLines(d, 48, 50) == Seq("line 48", "line 49"))
-  }
-
-  test("a segment straddling the base is refused, not silently mangled") {
-    val d = dir()
-    write(d, f"${10}%012d.wal", (10 until 20).map(i => s"line $i\n").mkString)
-    write(d, ".wal.idx", "@15\n" +
-      (15 until 20).map(i => java.lang.Long.toHexString(0x1000L + i * 0x10L) + "\n").mkString)
-    val e = intercept[IllegalStateException](new PgWalReceiver(client(), d))
-    assert(e.getMessage.contains("straddles"))
-  }
-
   test("the newest segment is never compacted, even when fully acked") {
     val d = dir()
-    (0 until 2).foreach { s =>
-      write(d, f"${s * 10}%012d.wal", (0 until 10).map(i => s"line ${s * 10 + i}\n").mkString)
-    }
-    write(d, ".wal.idx",
-      (0 until 20).map(i => java.lang.Long.toHexString(0x1000L + i * 0x10L) + "\n").mkString)
+    spool(d, 2)
     val r = new PgWalReceiver(() => client(), d, 10, 0, 0)
     r.ackLines(20)
     assert(r.compact() == 10)   // only the older segment goes
-    assert(new File(d, f"${10}%012d.wal").exists())
+    assert(seg(d, 10).file.exists())
     assert(WalSource.countLines(d) == 20)
     assert(r.compact() == 0)    // one segment left: nothing more to do
   }
@@ -187,9 +148,10 @@ class SpoolCompactionSpec extends AnyFunSuite {
       assert(spark.read.parquet(out).count() == lines.size.toLong)
 
       // the sink commits drove acks, acks drove compaction: early
-      // segments are gone and the idx shrank, but offsets stayed global
+      // segments and their sidecars are gone, but offsets stayed global
       assert(r.compactedLines >= 6, s"compactedLines=${r.compactedLines}")
       assert(!new File(d, f"${0}%012d.wal").exists())
+      assert(!new File(d, f".${0}%012d.wal.lsn").exists())
       assert(WalSource.countLines(d) == lines.size.toLong)
 
       // a restart from the checkpoint neither loses nor duplicates rows

@@ -76,7 +76,7 @@ class GoldenParitySpec extends AnyFunSuite {
 
     // replay through the WAL source + full transform, like E2E streaming
     val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "000.wal"),
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "000000000000.wal"),
       walLines.mkString("\n").getBytes("UTF-8"))
     val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(5))
     val out = CdcPipeline.transform(src, CdcConfig(partitionMethod = Partitioner.TableName))
@@ -97,7 +97,7 @@ class GoldenParitySpec extends AnyFunSuite {
 
   private def runPipeline(lines: Seq[String], cfg: CdcConfig): Seq[String] = {
     val dir = java.nio.file.Files.createTempDirectory("graft_golden2").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "000.wal"),
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "000000000000.wal"),
       lines.mkString("\n").getBytes("UTF-8"))
     val out = CdcPipeline.transform(CdcPipeline.fromWalSource(spark, dir), cfg)
     val q = out.writeStream.format("memory")

@@ -29,7 +29,7 @@ class LargeTxnSpec extends AnyFunSuite {
     (1 to n).foreach(i => lines.append(
       s"table public.big: INSERT: id[integer]:$i payload[text]:'row $i'\n"))
     lines.append("COMMIT 900")
-    Files.write(Paths.get(walDir, "000.wal"), lines.toString.getBytes("UTF-8"))
+    Files.write(Paths.get(walDir, "000000000000.wal"), lines.toString.getBytes("UTF-8"))
 
     val t0 = System.nanoTime()
     val src = CdcPipeline.fromWalSource(spark, walDir, maxLinesPerTrigger = Some(20000))
@@ -60,7 +60,7 @@ class LargeTxnSpec extends AnyFunSuite {
 
   test("client-buffer-size=1 analog: one line per trigger still delivers in order (test_small_queue)") {
     val walDir = Files.createTempDirectory("graft_tiny_wal").toString
-    Files.write(Paths.get(walDir, "000.wal"),
+    Files.write(Paths.get(walDir, "000000000000.wal"),
       (Seq("BEGIN 910") ++
         (1 to 5).map(i => s"table public.q: INSERT: id[integer]:$i") ++
         Seq("COMMIT 910")).mkString("\n").getBytes("UTF-8"))

@@ -27,7 +27,7 @@ class RestartSpec extends AnyFunSuite {
           rows.map(i => s"table public.t: INSERT: id[integer]:$i") ++
           Seq(s"COMMIT $txn")).mkString("\n").getBytes("UTF-8"))
 
-    segment("000.wal", 100, 1 to 20)
+    segment("000000000000.wal", 100, 1 to 20)
 
     val cfg = CdcConfig(partitionMethod = Partitioner.TableName)
     def startQuery() = {
@@ -46,7 +46,7 @@ class RestartSpec extends AnyFunSuite {
     q1.stop()
 
     // more WAL arrives while the query is down
-    segment("001.wal", 101, 21 to 35)
+    segment("000000000022.wal", 101, 21 to 35)
 
     val q2 = startQuery()
     q2.processAllAvailable()

@@ -15,6 +15,12 @@ ack past its deadline). This tool encodes that adjudication path:
      fixing the test's headroom); fails isolated -> REGRESSION
      (a real product/test bug — the gate fails).
 
+Each sbt invocation keeps its output in its own directory under
+target/test-gate/ (cleared at start): `run<N>/` for full run N and
+`run<N>-<suite>/` for that suite's isolated re-run, each holding
+`sbt.log` and a copy of that invocation's `target/test-reports`, so a
+re-run never overwrites the failing run's `TEST-<suite>.xml`.
+
 Exit 0 iff no REGRESSION (flakes are reported, listed, and make the
 gate exit 0 only with --allow-flakes; default treats any flake as a
 failure too, because the round bar is "one full run green").
@@ -24,16 +30,28 @@ Usage:
 """
 import argparse
 import json
+import os
 import re
+import shutil
 import subprocess
 import sys
 
 SBT = ["sbt", "-batch"]
+REPORTS = os.path.join("target", "test-reports")
+KEEP = os.path.join("target", "test-gate")
 
 
-def run(cmd):
+def run(cmd, keep_dir):
+    """Run one sbt invocation; keep its log and test reports in keep_dir."""
+    shutil.rmtree(REPORTS, ignore_errors=True)
     p = subprocess.run(cmd, capture_output=True, text=True)
-    return p.returncode, p.stdout + p.stderr
+    out = p.stdout + p.stderr
+    os.makedirs(keep_dir)
+    with open(os.path.join(keep_dir, "sbt.log"), "w") as f:
+        f.write(out)
+    if os.path.isdir(REPORTS):
+        shutil.copytree(REPORTS, os.path.join(keep_dir, "test-reports"))
+    return p.returncode, out
 
 
 def failed_suites(output):
@@ -63,10 +81,12 @@ def main():
     args = ap.parse_args()
 
     verdict = {"runs": [], "flakes": [], "regressions": []}
+    shutil.rmtree(KEEP, ignore_errors=True)
     for i in range(args.runs):
         print(f"[test_gate] full-suite run {i + 1}/{args.runs} ...",
               flush=True)
-        rc, out = run(SBT + ["test"])
+        run_dir = os.path.join(KEEP, f"run{i + 1}")
+        rc, out = run(SBT + ["test"], run_dir)
         suites = failed_suites(out) if rc != 0 else []
         # a nonzero rc with no parsable suites is a build/infra error:
         # fail closed, never classify it as green
@@ -75,18 +95,20 @@ def main():
             print(f"[test_gate] run {i + 1}: sbt failed without a "
                   f"failed-tests block (build error?)\n{tail}")
             verdict["runs"].append({"run": i + 1, "ok": False,
-                                    "failed_suites": ["<build-error>"]})
+                                    "failed_suites": ["<build-error>"],
+                                    "dir": run_dir})
             verdict["regressions"].append("<build-error>")
             break
         verdict["runs"].append({"run": i + 1, "ok": rc == 0,
-                                "failed_suites": suites})
+                                "failed_suites": suites, "dir": run_dir})
         print(f"[test_gate] run {i + 1}: "
               f"{'GREEN' if rc == 0 else 'failed suites: ' + ', '.join(suites)}",
               flush=True)
         for suite in suites:
             print(f"[test_gate] re-running {suite} in isolation ...",
                   flush=True)
-            rc2, out2 = run(SBT + [f"testOnly {suite}"])
+            rc2, _ = run(SBT + [f"testOnly {suite}"],
+                         os.path.join(KEEP, f"run{i + 1}-{suite}"))
             kind = "FLAKE" if rc2 == 0 else "REGRESSION"
             print(f"[test_gate] {suite}: {kind}", flush=True)
             verdict["flakes" if rc2 == 0 else "regressions"].append(suite)
