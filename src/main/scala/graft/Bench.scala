@@ -9,6 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * JSON the driver records as BENCH_r{N}.json.
   */
 object Bench {
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The positional per-query line: trimmed means in ascending name
+    * order, `null` for a query with no successful rep, so a parser reads
+    * a failure as missing instead of averaging a -1.0 sentinel.
+    */
+  private[graft] def perQueryLine(results: Seq[(String, Double)]): String = {
+    val values = results.map { case (_, v) => if (v >= 0) f3(v) else "null" }
+    s"""{"metric":"per_query","unit":"sec","order":"name_asc","n":${results.size},""" +
+      s""""values":${values.mkString("[", ",", "]")}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -273,7 +285,6 @@ object Bench {
       if (t.isEmpty) -1.0 else t.sum / t.size
     }
     val results = names.map { case (name, _) => name -> trimmedMean(samples(name)) }
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val all = names.map { case (name, _) =>
@@ -327,8 +338,7 @@ object Bench {
     // so this line + the total line + sbt's [success] line all fit the
     // window uncut. Additions-only: timing and the final total-line
     // contract are unchanged.
-    val posVals = results.map { case (_, v) => f3(v) }.mkString("[", ",", "]")
-    println(s"""{"metric":"per_query","unit":"sec","order":"name_asc","n":${names.size},"values":$posVals}""")
+    println(perQueryLine(results))
     // cal_normalized_total = suite total expressed in calibration-probe
     // units (value / cal_sec): host-speed drift multiplies both the
     // numerator and the probe, so cross-round comparisons of this ratio

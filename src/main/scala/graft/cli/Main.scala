@@ -476,7 +476,9 @@ object Main {
           maxLinesPerTrigger = Some(c.clientBufferSize))
         // BEGIN/COMMIT rows carry NULL json — transaction boundaries
         // feed the ack ledger, not the sink (reference transporters
-        // only ship marshalled records)
+        // only ship marshalled records). `transform` fences `json` (and
+        // the parse under it), so this filter cannot be inlined into a
+        // second parse and marshal: each runs once per row.
         val out = CdcPipeline.transform(src, cfg)
           .where(org.apache.spark.sql.functions.col("json").isNotNull)
         val writer = c.sink match {

@@ -29,6 +29,17 @@ object GraftFunctions {
   def prelude_operation(line: Column): Column =
     column(ParsePreludeField(expression(line), 1))
 
+  /** `c` behind a [[PushdownBarrier]]: evaluated once, in the projection
+    * that defines it, and never substituted into a consuming Filter or
+    * Project. Works in any session. Without `GraftExtensions` the fence
+    * covers the whole projection that holds `c`: a filter on ANY of its
+    * columns stays above it and runs after `c` is evaluated.
+    * `GraftExtensions` narrows the fence so filters on the other
+    * columns still push below it.
+    */
+  def fenced(c: Column): Column =
+    column(PushdownBarrier(expression(c)))
+
   /** Register SQL-callable functions on a session. */
   def registerAll(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

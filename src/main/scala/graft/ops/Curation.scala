@@ -165,8 +165,8 @@ object Curation {
     // several frac columns would otherwise inline the profile into the
     // Filter condition once per referenced column (PushdownBarrier
     // scaladoc; the gate measured 13 copies / ~40× at sf10)
-    val prof = column(graft.functions.PushdownBarrier(
-      graft.functions.RepetitionProfile(expression(toks), ns)))
+    val prof = graft.functions.GraftFunctions.fenced(
+      column(graft.functions.RepetitionProfile(expression(toks), ns)))
     val p = col("_profile")
     val fracs = ns.flatMap { n =>
       // short/empty docs carry one whole-text shingle, so cnt >= 1 always
@@ -295,8 +295,7 @@ object Curation {
       meanTokenLenRange: (Double, Double) = (2.0, 12.0),
       maxPunctRatio: Double = 0.2): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    def fenced(c: Column): Column =
-      column(graft.functions.PushdownBarrier(expression(c)))
+    import graft.functions.GraftFunctions.fenced
     val toks = TextAnalysis.tokens(TextAnalysis.normalize(col(textCol)))
     val prof = column(graft.functions.RepetitionProfile(expression(toks), Seq(2)))
     // whitespace-collapsed (but case-preserving) text: its length is

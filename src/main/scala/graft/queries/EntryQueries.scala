@@ -9,6 +9,7 @@ import graft.fixtures.CdcFixture.Col
 import graft.functions.GraftFunctions
 import graft.operators._
 import graft.ops.{Asof, Curation, Dedup, MediaFixtures, Multimodal, RangeJoin, Sampling, Sessionize, Similarity, Skew, TextAnalysis}
+import graft.streaming.{CdcConfig, CdcPipeline}
 
 /** The declared query inventory (SURVEY §2.1 Q1–Q10 plus the
   * training-data operators), each expressed through the engine's
@@ -2389,23 +2390,27 @@ object EntryQueries {
       |  FROM orders) WHERE rank <= 3""".stripMargin
 
   /** Full CDC pipeline (parse → filter → partition → marshal) over the
-    * events wire lines — the flagship/bench path. The oracle rebuilds
-    * the ENTIRE output JSON envelope byte-for-byte in SQL (fixed time
-    * fallback, `%X/%X` LSN via to_hex, merged columns map in source
-    * order, Jackson-style escaping of the props payload), so the whole
+    * events wire lines: the production [[CdcPipeline.transform]], with
+    * the source's txn/timeBasedKey/walStart stamps and the sinks'
+    * `json IS NOT NULL` filter. The oracle rebuilds the ENTIRE output
+    * JSON envelope byte-for-byte in SQL (fixed time fallback, `%X/%X`
+    * LSN via to_hex, merged columns map in source order, Jackson-style
+    * escaping of the props payload), so the whole
     * parse→filter→key→marshal chain is hash-checked, on top of the
     * reference-golden unit tests.
     */
   def qCdcPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val parsed = preludeFiltered(spark, dir,
-      TableFilter(Seq("^public\\.error$"), whitelist = false, regex = true))
-      .withColumn("txn", col("user_id").cast("string"))
-      .withColumn("timeBasedKey", concat(col("txn"), lit("-0")))
-      .withColumn("ord", col("event_id"))
-    val withMeta = CdcFixture.withSourceMeta(parsed)
-    val keyed = Partitioner(Partitioner.TableName)(withMeta)
-    Marshaller(noMarshalOldValue = false)(keyed)
-      .select("walStart", "operation", "relation", "partitionKey", "json")
+    val lines = eventLines(spark, dir).select(
+      col("line"),
+      col("user_id").cast("string").as("txn"),
+      concat(col("user_id").cast("string"), lit("-0")).as("timeBasedKey"),
+      col("event_id").as("walStart"))
+    val cfg = CdcConfig(filterTables = Seq("^public\\.error$"), regexFilter = true,
+      partitionMethod = Partitioner.TableName)
+    CdcPipeline.transform(lines, cfg)
+      .where(col("json").isNotNull)
+      .select(col("walStart"), col("operation"), col("table").as("relation"),
+        col("partitionKey"), col("json"))
   }
 
   val qCdcPipelineSql: String =

@@ -45,11 +45,23 @@ object CdcPipeline {
 
     // Table filtering runs on the PRELUDE parse (relation + operation
     // only, the reference's two-phase design, parselogical.go:89-95),
-    // BEFORE the full parse. Filtering on fields of the full parse
-    // would let predicate pushdown substitute the parse expression into
-    // the filter — evaluating the column automaton 3-4× per row; the
-    // prelude is cheap enough to duplicate, and rows that don't pass
-    // never pay column parsing at all (the reference's own intent).
+    // BEFORE the full parse: the prelude is cheap enough for predicate
+    // pushdown to duplicate, and rows that don't pass never pay column
+    // parsing at all (the reference's own intent).
+    //
+    // The full parse `p` and the marshalled `json` are FENCED
+    // (GraftFunctions.fenced). Unfenced, a filter on either (`p IS NOT
+    // NULL` here, a caller's `json IS NOT NULL`) is pushed below its
+    // projection with the expression substituted in, and FilterExec
+    // does no subexpression elimination: the plan a sink consumes would
+    // run the parser 6 times and the marshaller twice per row. Fenced,
+    // each runs once per row whatever a caller filters on, with or
+    // without GraftExtensions. In a session WITHOUT GraftExtensions
+    // (Main's replicate, cdcbench) the fence covers the whole
+    // projection: a caller's filter on any output column (table,
+    // operation, partitionKey, txn) also runs after the marshal, so
+    // table selection belongs in CdcConfig.filterTables, not in a
+    // filter on `table`.
     val tf = TableFilter(cfg.filterTables, cfg.whitelist, cfg.regexFilter)
     val preFiltered = withMeta.where(tf.predicate(
       GraftFunctions.prelude_relation(col("line")),
@@ -61,7 +73,7 @@ object CdcPipeline {
     val parsedFields = Seq("txn", "relation", "operation", "noTupleData", "columns", "oldColumns")
     val inputCols = withMeta.columns.filter(_ != "line")
     val parsed = preFiltered
-      .withColumn("p", GraftFunctions.parse_test_decoding(col("line")))
+      .withColumn("p", GraftFunctions.fenced(GraftFunctions.parse_test_decoding(col("line"))))
       .where(col("p").isNotNull)
       .select(inputCols.map(col) ++
         parsedFields.filterNot(inputCols.contains).map(f => col(s"p.$f").as(f)): _*)
@@ -72,6 +84,7 @@ object CdcPipeline {
 
     val keyed = Partitioner(cfg.partitionMethod)(stamped)
     val marshalled = Marshaller(cfg.noMarshalOldValue)(keyed)
+      .withColumn("json", GraftFunctions.fenced(col("json")))
       .select("operation", "relation", "json", "timeBasedKey", "walStart", "txn", "partitionKey")
       .withColumnRenamed("relation", "table")
     if (cfg.workers > 1) Router.route(marshalled, cfg.workers, cfg.routing)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.operators.{Partitioner, Router}
+import graft.streaming.{CdcConfig, CdcPipeline}
 
 /** Guard against the expression-inflation disease class found in round
   * 12: Catalyst's predicate pushdown substitutes projected aliases
@@ -81,5 +83,39 @@ class PlanInflationSpec extends AnyFunSuite {
     val c = liveCounts(filtered)
     assert(c.getOrElse("repetition_profile", 0) == 1,
       s"profile must appear exactly once in the filtered plan, got $c")
+  }
+
+  test("the production CDC plan parses and marshals once per row, with or without GraftExtensions") {
+    // `Main`'s replicate session and cdcbench add `where(json IS NOT
+    // NULL)` after `transform`; unfenced, pushdown inlines that filter
+    // into 6 parses and 2 marshals per row
+    val plain = org.apache.spark.sql.graft.PlainSession.of(spark)
+    assert(spark.catalog.functionExists("prelude_relation") &&
+      !plain.catalog.functionExists("prelude_relation"),
+      "the plain session must carry no GraftExtensions")
+    val filteredFanout = CdcConfig(
+      filterTables = Seq("public.t03", "public.t07", "public.t11", "public.t16"),
+      whitelist = true,
+      partitionMethod = Partitioner.TransactionBucket(16),
+      workers = 4,
+      routing = Router.Partition())
+    val found = for (
+        (sessionName, s) <- Seq("TestSpark" -> spark, "no extensions" -> plain);
+        (cfgName, cfg) <- Seq("CdcConfig()" -> CdcConfig(), "filtered_fanout" -> filteredFanout)) yield {
+      // the graft-wal source's columns; a computed (not literal) line
+      // keeps the parse from being constant-folded out of the plan
+      val lines = s.range(4).select(
+        concat(lit("table public.t03: INSERT: id[integer]:"), col("id").cast("string")).as("line"),
+        col("id").as("walStart"), col("id").as("serverWalEnd"), lit(0L).as("serverTimeMs"),
+        lit("7").as("txn"), lit("7-0").as("timeBasedKey"))
+      val out = CdcPipeline.transform(lines, cfg).where(col("json").isNotNull)
+      assert(out.count() == 4, s"$sessionName, $cfgName")
+      (s"$sessionName, $cfgName", liveCounts(out))
+    }
+    val inflated = found.filterNot { case (_, c) =>
+      c.getOrElse("marshal_json", 0) == 1 &&
+        c.getOrElse("parse_test_decoding", 0) <= bounds("parse_test_decoding")
+    }
+    assert(inflated.isEmpty, inflated.map { case (k, c) => s"$k: $c" }.mkString("\n  ", "\n  ", ""))
   }
 }
