@@ -102,16 +102,41 @@ object Main {
       |      without --eval-input the doc_id % 50 == 0 holdout is the
       |      decontamination reference""".stripMargin
 
-  /** Reference value precedence (main/main.go:561-566) minus the YAML
-    * file: command-line flag > environment variable > default. Env
-    * names match the reference's EnvVar tags (main.go:76-106,639-741):
-    * REPLICATION_SLOT, PGUSER/PGPASSWORD/PGHOST/PGPORT/PGDATABASE,
-    * CREATE_SLOT, WORKERS, CLIENT_BUFFER_SIZE, BATCH_FLUSH_MAX_AGE,
-    * BATCHER_ROUTING_METHOD, PARTITION_METHOD, PARTITION_COUNT,
-    * WHITELIST[_REGEX], BLACKLIST[_REGEX] (comma-separated),
-    * NO_MARSHAL_OLD_VALUE.
-    */
   private val listFlags = Set("whitelist", "blacklist", "whitelist-regex", "blacklist-regex")
+
+  /** The environment layer: each variable sets the flag it names here,
+    * with the flag's own parsing (so booleans take the flag spellings).
+    * Names are the reference's EnvVar tags (main.go:76-106,639-741;
+    * sink-specific ones kinesis/config.go:39-65,
+    * rabbitmq/config.go:37-50). List variables are comma-separated. An
+    * empty value counts as unset. PGPASSWORD is read only from the env
+    * map passed to [[parse]], so an injected env stays hermetic.
+    */
+  private val envFlags: Seq[(String, String)] = Seq(
+    "REPLICATION_SLOT" -> "slot",
+    "PGUSER" -> "user",
+    "PGPASSWORD" -> "password",
+    "PGHOST" -> "host",
+    "PGPORT" -> "port",
+    "PGDATABASE" -> "dbname",
+    "CREATE_SLOT" -> "create-slot",
+    "WORKERS" -> "workers",
+    "CLIENT_BUFFER_SIZE" -> "client-buffer-size",
+    "BATCH_FLUSH_MAX_AGE" -> "batch-flush-max-age",
+    "BATCHER_ROUTING_METHOD" -> "batcher-routing-method",
+    "PARTITION_METHOD" -> "partition-method",
+    "PARTITION_COUNT" -> "partition-count",
+    "WHITELIST" -> "whitelist",
+    "BLACKLIST" -> "blacklist",
+    "WHITELIST_REGEX" -> "whitelist-regex",
+    "BLACKLIST_REGEX" -> "blacklist-regex",
+    "NO_MARSHAL_OLD_VALUE" -> "no-marshal-old-value",
+    "BIFROST_KINESIS_STREAM" -> "kinesis-stream",
+    "AWS_REGION" -> "aws-region",
+    "ENDPOINT" -> "endpoint",
+    "BIFROST_RABBITMQ_URL" -> "rabbitmq-url",
+    "BIFROST_RABBITMQ_EXCHANGE_NAME" -> "exchange-name",
+    "BIFROST_RABBITMQ_BATCH_SIZE" -> "rabbitmq-batch-size")
 
   private def getList(c: Cli, flag: String): Seq[String] = flag match {
     case "whitelist" => c.whitelist
@@ -127,8 +152,8 @@ object Main {
     case "blacklist-regex" => c.copy(blacklistRegex = items)
   }
 
-  /** One scalar setting, shared by the YAML and flag layers (yaml keys
-    * ARE the flag names, as with the reference's altsrc). Booleans
+  /** One scalar setting, shared by the flag, env and YAML layers (yaml
+    * keys ARE the flag names, as with the reference's altsrc). Booleans
     * accept an empty value (bare-flag presence) as true.
     */
   private def applySetting(c: Cli, flag: String, value: String): Either[String, Cli] = {
@@ -179,6 +204,15 @@ object Main {
     }
   }
 
+  /** A setting from the env or YAML layer: a list flag's values are
+    * split on commas and replace the list; a scalar takes one value.
+    */
+  private def applyValues(c: Cli, flag: String, vs: Seq[String]): Either[String, Cli] =
+    if (listFlags(flag))
+      Right(setList(c, flag, vs.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)))
+    else if (vs.size != 1) Left(s"'$flag' does not take a list")
+    else applySetting(c, flag, vs.head)
+
   def parse(args: Seq[String], env: Map[String, String] = sys.env): Either[String, Cli] = {
     if (args.isEmpty) return Left("missing command")
     var c = Cli(command = args.head)
@@ -225,12 +259,7 @@ object Main {
           for ((k, vs) <- pairs) {
             if (k == "config")
               return Left(s"${cfgFile.getPath}: 'config' cannot be set from the config file")
-            if (listFlags(k)) {
-              c = setList(c, k,
-                vs.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
-            } else if (vs.size != 1) {
-              return Left(s"${cfgFile.getPath}: '$k' does not take a list")
-            } else applySetting(c, k, vs.head) match {
+            applyValues(c, k, vs) match {
               case Right(n) => c = n
               case Left(e) => return Left(s"${cfgFile.getPath}: $e")
             }
@@ -239,53 +268,11 @@ object Main {
     }
 
     // --- environment layer (overrides the file, overridden by flags) ---
-    def envInt(k: String): Either[String, Option[Int]] = env.get(k) match {
-      case None => Right(None)
-      case Some(v) =>
-        try Right(Some(v.toInt))
-        catch { case _: NumberFormatException => Left(s"$k needs an integer, got '$v'") }
-    }
-    def list(v: String): Seq[String] = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    env.get("REPLICATION_SLOT").foreach(v => c = c.copy(slot = v))
-    env.get("PGUSER").foreach(v => c = c.copy(user = v))
-    env.get("PGHOST").foreach(v => c = c.copy(host = v))
-    env.get("PGDATABASE").foreach(v => c = c.copy(dbname = v))
-    envInt("PGPORT") match {
-      case Right(o) => o.foreach(v => c = c.copy(port = v)); case Left(e) => return Left(e)
-    }
-    if (env.get("CREATE_SLOT").exists(v => v == "1" || v.equalsIgnoreCase("true")))
-      c = c.copy(createSlot = true)
-    envInt("WORKERS") match {
-      case Right(o) => o.foreach(v => c = c.copy(workers = v)); case Left(e) => return Left(e)
-    }
-    envInt("CLIENT_BUFFER_SIZE") match {
-      case Right(o) => o.foreach(v => c = c.copy(clientBufferSize = v)); case Left(e) => return Left(e)
-    }
-    envInt("BATCH_FLUSH_MAX_AGE") match {
-      case Right(o) => o.foreach(v => c = c.copy(batchFlushMaxAgeMillis = v.toLong)); case Left(e) => return Left(e)
-    }
-    envInt("PARTITION_COUNT") match {
-      case Right(o) => o.foreach(v => c = c.copy(partitionCount = v)); case Left(e) => return Left(e)
-    }
-    env.get("BATCHER_ROUTING_METHOD").foreach(v => c = c.copy(routingMethod = v))
-    env.get("PARTITION_METHOD").foreach(v => c = c.copy(partitionMethod = v))
-    env.get("WHITELIST").foreach(v => c = c.copy(whitelist = list(v)))
-    env.get("BLACKLIST").foreach(v => c = c.copy(blacklist = list(v)))
-    env.get("WHITELIST_REGEX").foreach(v => c = c.copy(whitelistRegex = list(v)))
-    env.get("BLACKLIST_REGEX").foreach(v => c = c.copy(blacklistRegex = list(v)))
-    if (env.get("NO_MARSHAL_OLD_VALUE").exists(v => v == "1" || v.equalsIgnoreCase("true")))
-      c = c.copy(noMarshalOldValue = true)
-    env.get("PGPASSWORD").foreach(v => c = c.copy(password = Some(v)))
-    // sink-specific EnvVar names (kinesis/config.go:39-65,
-    // rabbitmq/config.go:37-50)
-    env.get("BIFROST_KINESIS_STREAM").foreach(v => c = c.copy(kinesisStream = v))
-    env.get("AWS_REGION").foreach(v => c = c.copy(awsRegion = v))
-    env.get("ENDPOINT").foreach(v => c = c.copy(endpoint = v))
-    env.get("BIFROST_RABBITMQ_URL").foreach(v => c = c.copy(rabbitmqUrl = v))
-    env.get("BIFROST_RABBITMQ_EXCHANGE_NAME").foreach(v => c = c.copy(exchangeName = v))
-    envInt("BIFROST_RABBITMQ_BATCH_SIZE") match {
-      case Right(o) => o.foreach(v => c = c.copy(rabbitBatchSize = v)); case Left(e) => return Left(e)
-    }
+    for ((name, flag) <- envFlags; v <- env.get(name) if v.nonEmpty)
+      applyValues(c, flag, Seq(v)) match {
+        case Right(n) => c = n
+        case Left(e) => return Left(s"$name: $e")
+      }
 
     // --- flag layer (highest precedence). The first occurrence of a
     // list flag REPLACES any yaml/env-sourced list (reference altsrc

@@ -27,20 +27,6 @@ object CdcFixture {
     concat(lit("table "), relation, lit(": INSERT: "),
       concat_ws(" ", cols.map(renderCol): _*))
 
-  /** `table <rel>: UPDATE: old-key: ... new-tuple: ...` (REPLICA
-    * IDENTITY FULL shape). Pass `oldCols` empty for the default
-    * key-less UPDATE shape.
-    */
-  def updateLine(relation: Column, oldCols: Seq[Col], newCols: Seq[Col]): Column = {
-    val newPart = concat_ws(" ", newCols.map(renderCol): _*)
-    if (oldCols.isEmpty)
-      concat(lit("table "), relation, lit(": UPDATE: "), newPart)
-    else
-      concat(lit("table "), relation, lit(": UPDATE: old-key: "),
-        concat_ws(" ", oldCols.map(renderCol): _*),
-        lit(" new-tuple: "), newPart)
-  }
-
   /** `table <rel>: DELETE: ...` */
   def deleteLine(relation: Column, keyCols: Seq[Col]): Column =
     concat(lit("table "), relation, lit(": DELETE: "),
@@ -50,8 +36,8 @@ object CdcFixture {
     * walStart (monotone from `ord`), serverWalEnd, serverTimeMs=0 (the
     * PG 9–11 shape — exercises the marshaller's epoch fallback).
     */
-  def withSourceMeta(df: DataFrame, ordCol: String = "ord"): DataFrame =
-    df.withColumn("walStart", col(ordCol).cast("long"))
-      .withColumn("serverWalEnd", col(ordCol).cast("long"))
+  def withSourceMeta(df: DataFrame): DataFrame =
+    df.withColumn("walStart", col("ord").cast("long"))
+      .withColumn("serverWalEnd", col("ord").cast("long"))
       .withColumn("serverTimeMs", lit(0L))
 }

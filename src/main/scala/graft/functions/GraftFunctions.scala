@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.LongType
@@ -40,12 +40,6 @@ object GraftFunctions {
   def fenced(c: Column): Column =
     column(PushdownBarrier(expression(c)))
 
-  /** Register SQL-callable functions on a session. */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_test_decoding", exprs => ParseTestDecoding(exprs.head), "built-in")
-  }
-
   /** The reference's QuickHash (utils/utils.go:32-35): IEEE CRC32 of the
     * key modulo `buckets`. Spark's `crc32` is the same polynomial, so
     * bucketing is bit-identical to the reference.
@@ -80,11 +74,6 @@ object GraftFunctions {
   /** The `nprobe` nearest centroid indices (see [[NearestCells]]). */
   def nearest_cells(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
     column(NearestCells(expression(vec.cast("array<double>")), centroids, nprobe))
-
-  /** Dot product of two array columns (cast to double). */
-  def dot_product(a: Column, b: Column): Column =
-    aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
-      (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
 
   /** The reference's LSN display format `"%X/%X"` of the hi/lo 32 bits
     * (marshaller/marshaller.go:312-317).

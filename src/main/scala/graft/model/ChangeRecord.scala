@@ -15,36 +15,12 @@ import org.apache.spark.sql.types._
   */
 case class ColumnValue(v: String, t: String, q: Boolean)
 
-/** One parsed change record flowing through the pipeline: the Spark
-  * analog of the reference's WalMessage + ParseResult pair
-  * (replication/message.go:25-32, parselogical/parselogical.go:60-69).
-  *
-  * Schema is fully dynamic: a record carries its own `columns` map;
-  * no DDL is tracked anywhere in the engine.
+/** Spark types of a parsed change record: the analog of the
+  * reference's WalMessage + ParseResult pair (replication/message.go:25-32,
+  * parselogical/parselogical.go:60-69). Schema is fully dynamic: a
+  * record carries its own `columns` map; no DDL is tracked anywhere in
+  * the engine.
   */
-case class ChangeRecord(
-    walStart: Long,
-    serverWalEnd: Long,
-    serverTimeMs: Long,
-    txn: String,
-    timeBasedKey: String,
-    partitionKey: String,
-    relation: String,
-    operation: String,
-    noTupleData: Boolean,
-    columns: Map[String, ColumnValue],
-    oldColumns: Map[String, ColumnValue])
-
-/** Marshalled output record (reference marshaller/marshalled_message.go:21-29). */
-case class MarshalledMessage(
-    operation: String,
-    table: String,
-    json: String,
-    timeBasedKey: String,
-    walStart: Long,
-    txn: String,
-    partitionKey: String)
-
 object ChangeRecord {
   val columnValueType: StructType = StructType(Seq(
     StructField("v", StringType, nullable = true),

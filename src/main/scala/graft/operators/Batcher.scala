@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * what remains as data logic is:
   *
   *  - count-capped chunk assignment within a key (the per-sink record
-  *    caps, e.g. Kinesis 500, S3 50 000, Kafka/RabbitMQ 5 000);
+  *    caps of [[graft.streaming.BatchCaps]]);
   *  - per-transaction message accounting (`Seen`: how many marshalled
   *    messages a txn produced, and its COMMIT LSN — batcher.go:215-221),
   *    with BEGIN/COMMIT never entering batches (batcher.go:248-250).
@@ -22,12 +22,6 @@ import org.apache.spark.sql.functions._
   * ([[graft.streaming.ChunkedSink]]), same place the reference does it.
   */
 object Batcher {
-
-  /** Default per-sink record caps (reference config defaults). */
-  val KinesisMaxRecords = 500
-  val S3MaxRecords = 50000
-  val KafkaMaxRecords = 5000
-  val RabbitMqMaxRecords = 5000
 
   /** Assign a `chunkId` within each partition key: records are ordered
     * by `orderCol` and packed `maxRecords` to a chunk. Involves one
@@ -48,17 +42,12 @@ object Batcher {
     * COMMIT has not been observed — matching the ledger's "not yet
     * committed" sentinel).
     */
-  def seenCounts(
-      df: DataFrame,
-      timeBasedKeyCol: String = "timeBasedKey",
-      txnCol: String = "txn",
-      operationCol: String = "operation",
-      walStartCol: String = "walStart"): DataFrame = {
-    val op = col(operationCol)
-    df.groupBy(col(timeBasedKeyCol), col(txnCol))
+  def seenCounts(df: DataFrame): DataFrame = {
+    val op = col("operation")
+    df.groupBy(col("timeBasedKey"), col("txn"))
       .agg(
         sum(when(!op.isin("BEGIN", "COMMIT"), 1L).otherwise(0L)).as("totalMsgs"),
-        coalesce(max(when(op === "COMMIT", col(walStartCol))), lit(0L))
+        coalesce(max(when(op === "COMMIT", col("walStart"))), lit(0L))
           .as("commitWalStart"))
   }
 }

@@ -41,8 +41,6 @@ object Partitioner {
       GraftFunctions.md5_bucket(txn, n).cast("string")
   }
 
-  def apply(method: Method,
-            relationCol: String = "relation",
-            txnCol: String = "txn"): DataFrame => DataFrame =
-    df => df.withColumn("partitionKey", keyExpr(method, col(relationCol), col(txnCol)))
+  def apply(method: Method): DataFrame => DataFrame =
+    df => df.withColumn("partitionKey", keyExpr(method, col("relation"), col("txn")))
 }

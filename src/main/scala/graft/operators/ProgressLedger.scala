@@ -148,10 +148,10 @@ final class InMemoryLedger {
       var count: Int,
       var totalMsgs: Int)
 
-  // All public methods synchronize on `this`: the SIGIO-style dump
-  // (StatsReporters.dumpProgress) runs from a signal-handler thread
-  // while the streaming ack loop mutates; an unsynchronized iteration
-  // could throw ConcurrentModificationException or render torn state.
+  // All public methods synchronize on `this`: a reader on another
+  // thread (`size`/`entries` from a diagnostics or checker thread) may
+  // run while the ack loop mutates; an unsynchronized iteration could
+  // throw ConcurrentModificationException or render torn state.
   // Contention is nil — the ledger is touched per-transaction, not
   // per-record.
   private val items = mutable.LinkedHashMap.empty[String, Entry]
@@ -194,16 +194,6 @@ final class InMemoryLedger {
       case Some(e) =>
         e.count += w.count
     }
-  }
-
-  /** One line per in-flight entry in insertion order — the SIGIO dump
-    * shape (reference progress_tracker.go:291-305 prints each ledger
-    * entry via utils.go:80-92's `key:value` rendering).
-    */
-  def dumpLines: Seq[String] = synchronized {
-    items.values.iterator.map(e =>
-      s"${e.timeBasedKey}:{txn=${e.transaction} commitWalStart=${e.commitWalStart} " +
-        s"count=${e.count} totalMsgs=${e.totalMsgs}}").toSeq
   }
 
   /** Longest-complete-prefix ack; removes acked entries. */

@@ -25,14 +25,13 @@ object Router {
   case object RoundRobin extends Mode
   final case class Partition(hash: BucketHash = Crc32) extends Mode
 
-  def route(df: DataFrame, workers: Int, mode: Mode,
-            partitionKeyCol: String = "partitionKey"): DataFrame = mode match {
+  def route(df: DataFrame, workers: Int, mode: Mode): DataFrame = mode match {
     case RoundRobin =>
       df.repartition(workers)
     case Partition(hash) =>
       val worker = hash match {
-        case Crc32 => GraftFunctions.crc32_bucket(col(partitionKeyCol), workers)
-        case Md5 => GraftFunctions.md5_bucket(col(partitionKeyCol), workers)
+        case Crc32 => GraftFunctions.crc32_bucket(col("partitionKey"), workers)
+        case Md5 => GraftFunctions.md5_bucket(col("partitionKey"), workers)
       }
       df.withColumn("workerId", worker).repartition(workers, col("workerId"))
   }

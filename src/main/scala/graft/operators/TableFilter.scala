@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
 case class TableFilter(
     tables: Seq[String],
     whitelist: Boolean = true,
-    regex: Boolean = false,
-    relationCol: String = "relation",
-    operationCol: String = "operation")
+    regex: Boolean = false)
   extends (DataFrame => DataFrame) {
 
   /** The filter predicate on (relation, operation). */
@@ -36,5 +34,5 @@ case class TableFilter(
   }
 
   override def apply(df: DataFrame): DataFrame =
-    df.filter(predicate(col(relationCol), col(operationCol)))
+    df.filter(predicate(col("relation"), col("operation")))
 }

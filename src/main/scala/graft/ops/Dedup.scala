@@ -34,13 +34,6 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i, lit(k)))))
   }
 
-  def charShingles(text: Column, k: Int): Column = {
-    val norm = TextAnalysis.normalize(text)
-    when(length(norm) <= k, array(norm))
-      .otherwise(transform(sequence(lit(1), length(norm) - k + 1),
-        i => norm.substr(i, lit(k))))
-  }
-
   def minhash_signature(tokens: Column, numHashes: Int = 64, seed: Int = 42): Column =
     column(MinHashSignature(expression(tokens), numHashes, seed))
 
@@ -389,15 +382,6 @@ object Dedup {
       .join(sets.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
       .withColumn("jaccard", round(jaccard_long(col("hs_a"), col("hs_b")), 6))
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Exact Jaccard over the distinct shingle sets. */
-  def jaccardExpr(a: Column, b: Column): Column = {
-    val da = array_distinct(a)
-    val db = array_distinct(b)
-    val inter = size(array_intersect(da, db)).cast("double")
-    val union = size(array_union(da, db)).cast("double")
-    when(union === 0, 0.0d).otherwise(inter / union)
   }
 
   /** MinHash duplicate pairs above a Jaccard threshold. */

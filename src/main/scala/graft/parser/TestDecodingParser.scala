@@ -61,8 +61,6 @@ object TestDecodingParser {
   private final val SQuotedIdent = 7
   private final val SEnd = 8
 
-  private val emptyCols = VectorMap.empty[String, ColumnValue]
-
   /** Receives parsed columns as they are recognized. The hot path
     * (the Catalyst expression) supplies an array-backed sink so no
     * intermediate immutable maps are built per row.
@@ -90,19 +88,6 @@ object TestDecodingParser {
       ParsedChange(o.txn, o.relation, o.operation, o.noTupleData,
         sink.newCols.result(), sink.oldCols.result()))
   }
-
-  /** Parse only relation + operation (the reference's ParsePrelude):
-    * enough for table filtering without paying column parsing.
-    */
-  def parsePrelude(line: String): Either[String, ParsedChange] = {
-    val sink = new MapSink
-    parseImpl(line, preludeOnly = true, sink).map(o =>
-      ParsedChange(o.txn, o.relation, o.operation, o.noTupleData, emptyCols, emptyCols))
-  }
-
-  /** Null-on-error variant for use in the Catalyst expression hot path. */
-  def parseOrNull(line: String): ParsedChange =
-    parse(line).getOrElse(null)
 
   private object NoopSink extends ColumnSink {
     def add(oldSection: Boolean, name: String, v: String, t: String, q: Boolean): Unit = ()

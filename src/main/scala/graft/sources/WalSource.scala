@@ -207,7 +207,7 @@ object WalSource {
   * `BEGIN <xid>` line opens a transaction, and every line up to the
   * next BEGIN carries its txn id and time-based key.
   */
-private[sources] final class TxnStamp(var txn: String, var tbk: String, epochNanos: Long) {
+private[graft] final class TxnStamp(var txn: String, var tbk: String, epochNanos: Long) {
   def advance(line: String): Unit =
     if (line.startsWith("BEGIN ")) {
       txn = line.substring(6).trim

@@ -20,10 +20,6 @@ import PgWire._
 final case class XLogData(walStart: Long, serverWalEnd: Long,
                           serverTimeMs: Long, line: String)
 
-/** Fields of a PrimaryKeepalive frame. */
-final case class Keepalive(serverWalEnd: Long, serverTimeMs: Long,
-                           replyRequested: Boolean)
-
 final case class PgError(sqlState: String, message: String)
   extends RuntimeException(s"$sqlState: $message")
 

@@ -140,7 +140,6 @@ object PgWire {
     }
     def remaining(): Array[Byte] =
       java.util.Arrays.copyOfRange(payload, pos, payload.length)
-    def hasMore: Boolean = pos < payload.length
   }
 
   /** ErrorResponse/NoticeResponse: tagged cstring fields until \0;

@@ -216,12 +216,6 @@ object ChunkedSink {
     written
   }
 
-  /** RabbitMQ routing key: `<table>.<operation>`
-    * (rabbitmq/transporter/transporter.go:310-316).
-    */
-  def rabbitRoutingKey(table: String, operation: String): String =
-    s"$table.$operation"
-
   /** Kinesis per-record partition key: the record's WalStart, or the
     * batch partition key when key-affinity routing is on
     * (kinesis/batch/batch.go:75-89).

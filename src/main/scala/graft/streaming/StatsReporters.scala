@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
   * Data-derived stats (the windowed aggregates from
   * [[graft.operators.StatsAggregator]]) are emitted per micro-batch via
   * [[reportStatsd]] with a pluggable send function; the on-demand
-  * progress dump prints in the reference's stdout-reporter shape.
+  * SIGIO dump ([[registerSignalDump]]) prints in the reference's
+  * stdout-reporter shape.
   */
 object StatsReporters {
 
@@ -52,20 +53,6 @@ object StatsReporters {
         send(statsdLine(prefix, component, s"${statName}_min", unit, statType, r.getAs[Long]("min")))
       }
     }
-
-  /** On-demand progress dump — the reference's SIGIO handler
-    * (progress_tracker.go:291-305): ledger depth as the tracker's own
-    * `ledger_size` stat, the spool backlog as a queue-depth gauge, then
-    * one `entry:` line per in-flight transaction in insertion order.
-    */
-  def dumpProgress(ledger: graft.operators.InMemoryLedger, spoolDepth: Long,
-                   emit: String => Unit = stdoutEmit): Unit = {
-    emit(s"progress_tracker.ledger_size type=histogram unit=count value=${ledger.size}")
-    emit(s"progress_tracker.spool_depth type=gauge unit=lines value=$spoolDepth")
-    val lines = ledger.dumpLines
-    if (lines.isEmpty) emit("progress_tracker.ledger empty")
-    else lines.foreach(l => emit(s"entry: $l"))
-  }
 
   /** Register `dump` on a POSIX signal (default SIGIO, like the
     * reference's tracker loop). Returns false when the JVM reserves the

@@ -12,12 +12,26 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * per-batch commit fsyncs + driver round-trips, not operator work")
   * is checkable from numbers instead of asserted.
   *
-  * Usage: runMain graft.tools.StreamPhaseProbe [reps] [q1 q2 ...]
+  * Usage: runMain graft.tools.StreamPhaseProbe [reps] [q1 q2 ...] [ab:key=value]
   * Honors SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_EXTRA_CONF
   * like the bench.
   */
 object StreamPhaseProbe {
   def main(args: Array[String]): Unit = {
+    // interleaved A/B: "ab:key=value" as an arg applies the conf on
+    // EVEN reps and restores the key's prior session value on odd ones,
+    // so both arms sample the same host regime; a per-rep calibration
+    // stamp (a fixed CPU+shuffle workload, the bench's convention)
+    // attributes residual drift
+    val ab = args.collectFirst { case a if a.startsWith("ab:") =>
+      a.stripPrefix("ab:").split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => (k, v)
+        case _ =>
+          System.err.println(
+            s"usage: StreamPhaseProbe [reps] [q1 q2 ...] [ab:key=value]; got '$a'")
+          sys.exit(2)
+      }
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val builder = SparkSession.builder()
@@ -45,15 +59,8 @@ object StreamPhaseProbe {
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     })
-    // interleaved A/B: "ab:key=value" as an arg applies the conf on
-    // EVEN reps and clears it on odd ones, so both arms sample the same
-    // host regime; a per-rep calibration stamp (a fixed CPU+shuffle
-    // workload, the bench's convention) attributes residual drift
-    val ab = args.collectFirst { case a if a.startsWith("ab:") =>
-      a.stripPrefix("ab:").split("=", 2) match {
-        case Array(k, v) => (k, v)
-      }
-    }
+    // arm A's value: the session's own (SPARK_GRAFT_EXTRA_CONF), else unset
+    val prior = ab.flatMap { case (k, _) => spark.conf.getOption(k) }
     val rest = args.filterNot(_.startsWith("ab:"))
     val reps = if (rest.nonEmpty) rest(0).toInt else 2
     val names =
@@ -74,7 +81,7 @@ object StreamPhaseProbe {
     for (rep <- 1 to reps) {
       val arm = ab match {
         case Some((k, v)) if rep % 2 == 0 => spark.conf.set(k, v); "B"
-        case Some((k, _)) => spark.conf.unset(k); "A"
+        case Some((k, _)) => prior.fold(spark.conf.unset(k))(spark.conf.set(k, _)); "A"
         case None => "-"
       }
       for (n <- names) {

@@ -87,6 +87,12 @@ class CliSpec extends AnyFunSuite {
     assert(c2.slot == "flag_slot" && c2.whitelist == Seq("public.z"))
     // malformed numeric env is a usage error, not an exception
     assert(Main.parse(Seq("create"), Map("PGPORT" -> "abc")).isLeft)
+    // booleans take the flag spellings; a malformed one is a usage
+    // error naming the variable; an empty value leaves the default
+    assert(Main.parse(Seq("create"), Map("CREATE_SLOT" -> "yes")).toOption.get.createSlot)
+    assert(Main.parse(Seq("create"), Map("CREATE_SLOT" -> "maybe"))
+      .left.toOption.get.contains("CREATE_SLOT"))
+    assert(!Main.parse(Seq("create"), Map("CREATE_SLOT" -> "")).toOption.get.createSlot)
     // an injected env WITHOUT PGPASSWORD must not leak the host's value:
     // the password default is None and only parse()'s env map fills it
     assert(Main.Cli().password.isEmpty)
@@ -131,6 +137,12 @@ class CliSpec extends AnyFunSuite {
       "--slot", "flag_slot", "--whitelist", "public.z"),
       Map("REPLICATION_SLOT" -> "env_slot")).toOption.get
     assert(c3.slot == "flag_slot" && c3.whitelist == Seq("public.z"))
+
+    // an env boolean false overrides a yaml true
+    val cfgOld = write("old.yaml", "no-marshal-old-value: true\n")
+    assert(Main.parse(Seq("create", "--config", cfgOld), Map.empty).toOption.get.noMarshalOldValue)
+    assert(!Main.parse(Seq("create", "--config", cfgOld),
+      Map("NO_MARSHAL_OLD_VALUE" -> "false")).toOption.get.noMarshalOldValue)
 
     // inline lists and boolean false
     val cfg2 = write("inline.yaml",

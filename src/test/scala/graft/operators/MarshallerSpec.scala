@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.fixtures.CdcFixture
 import graft.functions.GraftFunctions
+import graft.sources.TxnStamp
 
 /** End-to-end parse→stamp→marshal against the reference's golden
   * outputs (itests/tests/base/test_basic/golden/test.0 shape), compared
@@ -20,11 +21,13 @@ class MarshallerSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private def marshal(lines: Seq[String], noMarshalOld: Boolean = false): Seq[String] = {
-    val df = lines.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toDF("ord", "line")
-    val parsed = df
-      .select($"ord", GraftFunctions.parse_test_decoding($"line").as("p"))
-      .select($"ord", $"p.*")
-    val stamped = TxnStamper.stamp(parsed, "ord")
+    // stamped in WAL order by the source's own stamper, epochNanos 0
+    val stamp = new TxnStamp("", "", 0L)
+    val df = lines.zipWithIndex.map { case (l, i) => stamp.advance(l); (i.toLong, l, stamp.tbk) }
+      .toDF("ord", "line", "timeBasedKey")
+    val stamped = df
+      .select($"ord", $"timeBasedKey", GraftFunctions.parse_test_decoding($"line").as("p"))
+      .select($"ord", $"timeBasedKey", $"p.relation", $"p.operation", $"p.columns", $"p.oldColumns")
     val out: DataFrame = Marshaller(noMarshalOld)(CdcFixture.withSourceMeta(stamped))
     out.orderBy("ord").select("json").as[String].collect().toSeq
   }

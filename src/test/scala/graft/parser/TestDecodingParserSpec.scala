@@ -99,10 +99,15 @@ class TestDecodingParserSpec extends AnyFunSuite {
   }
 
   test("prelude-only parse stops after operation") {
-    val p = TestDecodingParser.parsePrelude(
-      "table public.customers: INSERT: id[integer]:1").toOption.get
+    val p = TestDecodingParser.parsePreludeOrNull(
+      "table public.customers: INSERT: id[integer]:1")
     assert(p.relation == "public.customers" && p.operation == "INSERT")
-    assert(p.columns.isEmpty)
+    // the column section is never read: a malformed one passes the
+    // prelude parse and fails only the full parse
+    val bad = "table public.customers: INSERT: id[integer]:'unterminated"
+    val q = TestDecodingParser.parsePreludeOrNull(bad)
+    assert(q != null && q.relation == "public.customers" && q.operation == "INSERT")
+    assert(TestDecodingParser.parse(bad).isLeft)
   }
 
   test("malformed inputs rejected") {

@@ -222,7 +222,6 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("sink key semantics match the reference") {
-    assert(ChunkedSink.rabbitRoutingKey("public.users", "INSERT") == "public.users.INSERT")
     val r = rec("pk7", "t", 42, 1)
     assert(ChunkedSink.kinesisPartitionKey(r, keyed = true) == "pk7")
     assert(ChunkedSink.kinesisPartitionKey(r, keyed = false) == "42")

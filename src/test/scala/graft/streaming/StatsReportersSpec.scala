@@ -31,32 +31,6 @@ class StatsReportersSpec extends AnyFunSuite {
     assert(!lines.exists(_.contains("batches_avg")))
   }
 
-  test("SIGIO-style progress dump: depth stats + one entry line per in-flight txn") {
-    import graft.operators.{InMemoryLedger, Seen, Written}
-    val l = new InMemoryLedger
-    assert(l.updateSeen(Seen("800", "800-1", 3, 0x130L)).isRight)
-    l.updateWritten(Written("800", "800-1", 2))
-    l.updateWritten(Written("801", "801-1", 5)) // written before its seen
-
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    StatsReporters.dumpProgress(l, spoolDepth = 42L, lines += _)
-
-    assert(lines(0) == "progress_tracker.ledger_size type=histogram unit=count value=2")
-    assert(lines(1) == "progress_tracker.spool_depth type=gauge unit=lines value=42")
-    // insertion order, full entry state — the reference's `entry: k:v` dump
-    assert(lines(2) == "entry: 800-1:{txn=800 commitWalStart=304 count=2 totalMsgs=3}")
-    assert(lines(3) == "entry: 801-1:{txn=801 commitWalStart=0 count=5 totalMsgs=0}")
-    assert(lines.size == 4)
-
-    // an emptied ledger dumps its emptiness explicitly, not zero lines
-    l.updateWritten(Written("800", "800-1", 1))
-    assert(l.emitProgress().contains(0x130L))
-    val l2 = new InMemoryLedger
-    val empty = scala.collection.mutable.ArrayBuffer[String]()
-    StatsReporters.dumpProgress(l2, spoolDepth = 0L, empty += _)
-    assert(empty.last == "progress_tracker.ledger empty")
-  }
-
   test("signal registration delivers the dump on raise") {
     val fired = new java.util.concurrent.CountDownLatch(1)
     val ok = StatsReporters.registerSignalDump("IO")(() => fired.countDown())
