@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.{Partitioner, Router}
+import graft.sources.WalOffset
 import graft.sources.pg.{PgReplicationClient, PgWalReceiver}
 import graft.streaming.{CdcConfig, CdcPipeline, KafkaKeyMode}
 
@@ -460,7 +461,7 @@ object Main {
       val cfg = cdcConfig(c)
       try {
         val src = CdcPipeline.fromWalSource(spark, c.spoolDir,
-          maxLinesPerTrigger = Some(c.clientBufferSize))
+          maxLinesPerTrigger = Some(c.clientBufferSize), flushAgeMillis = cfg.triggerMillis)
         // BEGIN/COMMIT rows carry NULL json — transaction boundaries
         // feed the ack ledger, not the sink (reference transporters
         // only ship marshalled records). `transform` fences `json` (and
@@ -470,7 +471,7 @@ object Main {
           .where(org.apache.spark.sql.functions.col("json").isNotNull)
         val writer = c.sink match {
           case "stdout" =>
-            val w = CdcPipeline.toConsole(out, cfg)
+            val w = CdcPipeline.toConsole(out)
             if (c.checkpoint.nonEmpty) w.option("checkpointLocation", c.checkpoint) else w
           case "s3" => CdcPipeline.toGzipFiles(out, c.outPath, c.checkpoint, cfg)
           case "kafka" => CdcPipeline.toKafka(out, c.kafkaBootstrap, c.kafkaTopic,
@@ -479,7 +480,7 @@ object Main {
               case "transaction" => KafkaKeyMode.Transaction
               case "tablename" => KafkaKeyMode.TableName
               case "random" => KafkaKeyMode.Random // validate() rejects others
-            }, c.checkpoint, cfg)
+            }, c.checkpoint)
           case "kinesis" | "rabbitmq" =>
             import graft.streaming.{BatchCaps, EpochTracker, TransportRegistry, TransportSpec}
             val sinkName = c.sink
@@ -532,18 +533,32 @@ object Main {
             if (n == last) stablePolls += 1 else { stablePolls = 0; last = n }
             Thread.sleep(100)
           }
-          query.processAllAvailable()
-          // The source acks a committed offset from the following
-          // trigger; a once-run stops without waiting for one, so the
-          // final offset might never reach the ack hook and the slot
-          // would replay the entire run on restart. Ack the
-          // DRAIN-STABLE line count `last` — NOT a fresh
-          // receiver.linesSpooled read: a live server can spool more
-          // lines between the final processAllAvailable and this ack,
-          // and confirming those unwritten lines upstream would lose
-          // them permanently. Everything up to `last` IS durably
-          // written (the loop saw it stable across 3 polls and
-          // processAllAvailable covered it, throwing on failure); the
+          // processAllAvailable returns at the first poll that admits
+          // nothing, and the source holds a partial range back for up
+          // to the flush age, so `last` may not be written yet. Drain
+          // until the committed frontier (the last progress event's end
+          // offset: a progress event follows its batch's commit) covers
+          // it. processAllAvailable rethrows a failed query's cause, also
+          // once it is inactive; a query that ends any other way fails
+          // the run too, so nothing unwritten is ever acked below.
+          def committed: Long = Option(query.lastProgress)
+            .flatMap(_.sources.headOption).flatMap(p => Option(p.endOffset))
+            .fold(0L)(WalOffset.fromJson(_).lsn)
+          while (committed < last) {
+            query.processAllAvailable()
+            if (!query.isActive)
+              throw query.exception.getOrElse(new IllegalStateException(
+                s"query stopped before committing spool line $last"))
+            Thread.sleep(10)
+          }
+          // The source acks a committed offset from the following poll;
+          // a once-run stops without waiting for one, so the final
+          // offset might never reach the ack hook and the slot would
+          // replay the entire run on restart. Ack the DRAIN-STABLE line
+          // count `last` — NOT a fresh receiver.linesSpooled read: a
+          // live server can spool more lines after the loop above, and
+          // confirming those unwritten lines upstream would lose them
+          // permanently. Everything up to `last` is committed; the
           // receiver's stop sends the final forced status.
           receiver.ackLines(last)
         } else query.awaitTermination()

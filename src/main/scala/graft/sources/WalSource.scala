@@ -21,12 +21,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Architecture: offsets are global spool line ordinals (line N is the
   * Nth line ever spooled, surviving compaction). Each micro-batch covers
-  * a line range; admission control caps the range per trigger
-  * (`maxLinesPerTrigger`, the analog of the reference's bounded client
-  * buffer, U2). A range is committed only after its sink write, and the
-  * next trigger's `latestOffset` acks the committed frontier through
-  * the ack hook — where [[graft.sources.pg.PgWalReceiver]] maps the
-  * line count back to an LSN and sends StandbyStatusUpdate, closing the
+  * a line range, and admission follows the reference batcher's flush
+  * rule (O8, U2): with `maxLinesPerTrigger` = n (the bounded client
+  * buffer) a range is admitted once n lines are pending (a full buffer,
+  * capped at n) or once `flushAgeMillis` has passed since the last
+  * admission (the flush age); otherwise the poll admits nothing. A
+  * range is committed only after its sink write, and the engine's next
+  * poll of `latestOffset` (every `spark.sql.streaming.pollingDelay`
+  * under the default trigger) acks the committed frontier through the
+  * ack hook — where [[graft.sources.pg.PgWalReceiver]] maps the line
+  * count back to an LSN and sends StandbyStatusUpdate, closing the
   * exactly-once loop without any driver-side ledger (checkpointing
   * provides the contiguity guarantee).
   *
@@ -38,7 +42,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The WAL byte stream itself comes from a spool directory whose format
   * the [[WalSource]] object owns: segments named by their global start
-  * line, each with an optional LSN sidecar. A replay test or the
+  * line, each with an optional LSN sidecar. The ~100 polls a second
+  * count it through a [[WalSource.LineCounter]], which lists the spool
+  * only when a new segment appears. A replay test or the
   * benchmark writes segments directly; live,
   * [[graft.sources.pg.PgWalReceiver]] spools the replication stream into
   * the same layout (exercised against a real server by `LivePgSoakSpec`).
@@ -55,7 +61,9 @@ class WalSourceProvider extends TableProvider with DataSourceRegister {
                         properties: util.Map[String, String]): Table =
     new WalTable(properties.get("path"),
       Option(properties.get("maxLinesPerTrigger")).map(_.toInt),
-      Option(properties.get("epochNanos")).map(_.toLong).getOrElse(0L))
+      Option(properties.get("epochNanos")).map(_.toLong).getOrElse(0L),
+      Option(properties.get("flushAgeMillis")).map(_.toLong).getOrElse(
+        throw new IllegalArgumentException("graft-wal needs the flushAgeMillis option")))
 }
 
 object WalSource {
@@ -109,14 +117,17 @@ object WalSource {
     Option(new java.io.File(path).listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
 
   /** The spool's segments in line order. Any file that is neither
-    * dot-prefixed nor named by a start line is refused: counting it in
-    * name order would shift every offset after it.
+    * dot-prefixed nor named `segmentName(start)` is refused: counting it
+    * in name order would shift every offset after it, and a poll that
+    * probes for the next segment by that name would never see it.
     */
   def segments(path: String): IndexedSeq[Segment] =
     listFiles(path).iterator.filter(f => f.isFile && !f.getName.startsWith("."))
       .map { f =>
         f.getName match {
-          case SegmentName(digits) => Segment(java.lang.Long.parseLong(digits), f)
+          case n @ SegmentName(digits)
+              if segmentName(java.lang.Long.parseLong(digits)) == n =>
+            Segment(java.lang.Long.parseLong(digits), f)
           case n => throw new IllegalStateException(
             s"spool $path holds $n, which is not a segment named by its start line " +
               "(%012d.wal); move it out of the spool")
@@ -198,9 +209,33 @@ object WalSource {
     out.toSeq
   }
 
-  def countLines(path: String): Long = retryOnVanish {
-    segments(path).lastOption.fold(0L)(t => t.start + tailLineCount(t.file))
+  /** One poller's line count of a spool, listing the spool only when
+    * its tail changes. Segments are named by their start line, so the
+    * known tail is closed exactly when the segment named by its end
+    * exists; until then (or until the tail vanishes) a poll counts the
+    * tail and probes that one name instead of stat-ing every segment.
+    * Not thread-safe: one instance per polling thread.
+    */
+  final class LineCounter(path: String) {
+    private var tail: Option[Segment] = None
+
+    /** Spool listings so far. */
+    private[graft] var listings = 0L
+
+    def count(): Long = retryOnVanish {
+      val known = tail.flatMap { t =>
+        try Some(t.start + tailLineCount(t.file))
+        catch { case _: java.io.FileNotFoundException => None }
+      }
+      known.filterNot(n => new java.io.File(path, segmentName(n)).exists()).getOrElse {
+        listings += 1
+        tail = segments(path).lastOption
+        tail.fold(0L)(t => t.start + tailLineCount(t.file))
+      }
+    }
   }
+
+  def countLines(path: String): Long = new LineCounter(path).count()
 }
 
 /** Transaction stamping state (O4) rolled forward line by line: a
@@ -240,29 +275,37 @@ object WalOffset {
   }
 }
 
-class WalTable(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long)
+class WalTable(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long,
+               flushAgeMillis: Long)
   extends Table with SupportsRead {
   override def name(): String = s"graft-wal(`$path`)"
   override def schema(): StructType = WalSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new WalScan(path, maxLinesPerTrigger, epochNanos)
+    () => new WalScan(path, maxLinesPerTrigger, epochNanos, flushAgeMillis)
 }
 
-class WalScan(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long) extends Scan {
+class WalScan(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long,
+              flushAgeMillis: Long) extends Scan {
   override def readSchema(): StructType = WalSource.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WalMicroBatchStream(path, maxLinesPerTrigger, epochNanos)
+    new WalMicroBatchStream(path, maxLinesPerTrigger, epochNanos, flushAgeMillis)
 }
 
-class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long)
+class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long,
+                          flushAgeMillis: Long)
   extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = WalOffset(0L, "", "")
 
+  /** The flush rule as Spark read limits, the Kafka source's
+    * `minOffsetsPerTrigger`/`maxTriggerDelay` pair: at least n lines or
+    * the flush age (`minRows`), at most n lines (`maxRows`).
+    */
   override def getDefaultReadLimit: ReadLimit =
-    maxLinesPerTrigger.map(n => ReadLimit.maxRows(n.toLong))
+    maxLinesPerTrigger.map(n => ReadLimit.compositeLimit(Array(
+      ReadLimit.minRows(n.toLong, flushAgeMillis), ReadLimit.maxRows(n.toLong))))
       .getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(): Offset =
@@ -271,15 +314,26 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
   /** Highest line count handed to the ack hook (monotone guard). */
   private var lastAcked = 0L
 
-  /** Admission control: advance at most `maxRows` lines past `start`,
-    * and roll the stamping state forward over the admitted range
-    * (driver-side scan of just that slice — the live protocol provider
-    * tracks this state for free as it consumes the socket).
+  /** `System.nanoTime` of the last admission; none before the first. */
+  private var lastAdmitNanos: Option[Long] = None
+
+  /** The spool's line count, polled without listing an unchanged spool. */
+  private[graft] val lines = new WalSource.LineCounter(path)
+
+  /** Admission control by the flush rule: under the default limit, a
+    * poll admits `min(pending, n)` lines once n are pending or the last
+    * admission is at least `flushAgeMillis` old (the first poll of a run
+    * admits at once), and nothing otherwise; `ReadAllAvailable` admits
+    * everything pending. It rolls the stamping state forward over the
+    * admitted range (driver-side scan of just that slice — the live
+    * protocol provider tracks this state for free as it consumes the
+    * socket).
     *
     * This is also the single ack site. The engine calls it on every
-    * trigger, and only once the batch ending at `start` is in the
-    * commit log (one batch in flight, no async progress tracking), so
-    * `start` is the durably written frontier — acked here even when the
+    * poll, and only once the batch ending at `start` is in the commit
+    * log (one batch in flight, no async progress tracking), so `start`
+    * is the durably written frontier — acked here within one polling
+    * delay of the commit, also while admission waits and when the
     * source has gone idle and no next batch is ever constructed.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
@@ -288,13 +342,19 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
       lastAcked = s.lsn
       Option(WalSource.ackHooks.get(path)).foreach(_(s.lsn))
     }
-    val total = WalSource.countLines(path)
-    val end = limit match {
-      case rl: streaming.ReadMaxRows => math.min(total, s.lsn + rl.maxRows())
-      case _ => total
+    val pending = lines.count() - s.lsn
+    val now = System.nanoTime()
+    val admitted = (limit, maxLinesPerTrigger) match {
+      case (_: streaming.ReadAllAvailable, _) | (_, None) => pending
+      case (_, Some(n)) =>
+        val due = pending >= n ||
+          lastAdmitNanos.forall(t => now - t >= flushAgeMillis * 1000000L)
+        if (due) math.min(pending, n.toLong) else 0L
     }
-    if (end == s.lsn) s
+    if (admitted <= 0) s
     else {
+      lastAdmitNanos = Some(now)
+      val end = s.lsn + admitted
       val stamp = new TxnStamp(s.txn, s.timeBasedKey, epochNanos)
       WalSource.readLines(path, s.lsn, end).foreach(stamp.advance)
       WalOffset(end, stamp.txn, stamp.tbk)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 import graft.functions.GraftFunctions
@@ -19,13 +19,20 @@ final case class CdcConfig(
     noMarshalOldValue: Boolean = false,
     workers: Int = 1,
     routing: Router.Mode = Router.RoundRobin,
-    triggerMillis: Long = 1000L) // reference batcher tick: 1 s
+    /** The reference batcher's flush age (`--batch-flush-max-age`):
+      * the longest a partial range waits for admission. It reaches the
+      * source through [[CdcPipeline.fromWalSource]]; the sinks run
+      * Spark's default trigger, which polls the source between batches.
+      */
+    triggerMillis: Long = 1000L)
 
 /** The Structured-Streaming CDC pipeline: raw `test_decoding` lines →
-  * parse → filter → partition-key → marshal → sink, with micro-batch
-  * cadence standing in for the reference's flush ages and Spark
-  * checkpointing standing in for the ledger: the source's
-  * `latestOffset` acks the committed frontier (SURVEY §3.1, §7).
+  * parse → filter → partition-key → marshal → sink, with the source's
+  * read limit standing in for the reference's flush rule (a full buffer
+  * or the flush age admits a range) and Spark checkpointing standing in
+  * for the ledger: the source's `latestOffset`, polled between batches
+  * under the default trigger, acks the committed frontier (SURVEY §3.1,
+  * §7).
   *
   * The whole stateless middle is ONE Catalyst pipeline — parse, filter,
   * key and JSON-render fuse into a single whole-stage-codegen loop per
@@ -92,31 +99,35 @@ object CdcPipeline {
   }
 
   /** The DSv2 CDC source ([[graft.sources.WalSourceProvider]]): line
-    * ordinal offsets, source-side txn stamping, per-trigger admission
-    * control, commit→ack. Rows feed [[transform]] directly.
+    * ordinal offsets, source-side txn stamping, admission control,
+    * commit→ack. With `maxLinesPerTrigger` = n, a range is admitted
+    * once n lines are pending or `flushAgeMillis` after the last
+    * admission (0: at every poll). Rows feed [[transform]] directly.
     */
   def fromWalSource(spark: SparkSession, path: String,
                     maxLinesPerTrigger: Option[Int] = None,
-                    epochNanos: Long = 0L): DataFrame = {
+                    epochNanos: Long = 0L,
+                    flushAgeMillis: Long = CdcConfig().triggerMillis): DataFrame = {
     val r = spark.readStream.format("graft-wal")
       .option("path", path)
       .option("epochNanos", epochNanos.toString)
+      .option("flushAgeMillis", flushAgeMillis.toString)
     maxLinesPerTrigger.foreach(n => r.option("maxLinesPerTrigger", n.toString))
     r.load()
   }
 
   /** Console sink (reference stdout transporter O10). */
-  def toConsole(df: DataFrame, cfg: CdcConfig): DataStreamWriter[Row] =
+  def toConsole(df: DataFrame): DataStreamWriter[Row] =
     df.writeStream
       .format("console")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMillis))
       .option("truncate", value = false)
 
   /** Date-partitioned gzip NDJSON file sink — the S3 transporter's
     * `keyspace/YYYY/MM/DD/HH/...gz` layout (O12,
     * reference transport/transporters/s3). On a cluster, pointing the
     * path at `s3a://bucket/keyspace` is the complete story: one object
-    * per partition file, gzip-compressed, date-bucketed.
+    * per partition file, gzip-compressed, date-bucketed. `cfg` is
+    * unused: the flush age is the source's ([[fromWalSource]]).
     */
   def toGzipFiles(df: DataFrame, path: String, checkpoint: String,
                   cfg: CdcConfig): DataStreamWriter[Row] =
@@ -128,7 +139,6 @@ object CdcPipeline {
       .option("path", path)
       .option("checkpointLocation", checkpoint)
       .partitionBy("year", "month", "day", "hour")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMillis))
 
   /** Attach the S3 layout's date-partition columns (the reference keys
     * objects by wall-clock at write time — s3/transporter key_join).
@@ -146,7 +156,8 @@ object CdcPipeline {
     * under the per-sink caps, partial-failure retry under exponential
     * backoff, and the epoch-replay guard for exactly-once across
     * micro-batch replays. The RPC edge is a [[RecordTransport]]
-    * factory, resolved per-partition at `open` time.
+    * factory, resolved per-partition at `open` time. `cfg` is unused:
+    * the flush age is the source's ([[fromWalSource]]).
     */
   def toTransport(df: DataFrame, caps: BatchCaps,
                   transportFactory: () => RecordTransport,
@@ -154,7 +165,6 @@ object CdcPipeline {
                   tracker: EpochTracker = EpochTracker.none): DataStreamWriter[Row] =
     df.writeStream
       .foreach(ChunkedSink.foreachWriter(caps, transportFactory, tracker))
-      .trigger(Trigger.ProcessingTime(cfg.triggerMillis))
 
   /** The kafka writer's full contract — key/value projection for the
     * chosen [[KafkaKeyMode]] plus every option handed to the
@@ -184,13 +194,11 @@ object CdcPipeline {
     * full writer contract is [[kafkaSinkPlan]], which is spec-asserted.
     */
   def toKafka(df: DataFrame, bootstrap: String, topic: String,
-              keyMode: KafkaKeyMode, checkpoint: String,
-              cfg: CdcConfig): DataStreamWriter[Row] = {
+              keyMode: KafkaKeyMode, checkpoint: String): DataStreamWriter[Row] = {
     val plan = kafkaSinkPlan(df, bootstrap, topic, keyMode, checkpoint)
     plan.projected.writeStream
       .format("kafka")
       .options(plan.options)
-      .trigger(Trigger.ProcessingTime(cfg.triggerMillis))
   }
 }
 

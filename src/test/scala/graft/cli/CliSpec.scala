@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.sources.pg.FakePgServer
+import graft.sources.pg.{FakeConn, FakePgServer}
 
 /** The runnable entry point, driven end-to-end against the fake PG
   * server — the reference's `pg-bifrost create|drop|replicate <sink>`
@@ -221,6 +221,87 @@ class CliSpec extends AnyFunSuite {
       assert(awaitTrue()(!srv.acks.isEmpty))
       assert(srv.acks.asScala.forall(a => a == 0L || lines.map(_._1).contains(a)))
     } finally srv.stop()
+  }
+
+  test("replicate s3 --once: a tail held back by the flush age is written before it is acked") {
+    val head = Seq(
+      0x100L -> "BEGIN 720",
+      0x110L -> "table public.users: INSERT: id[integer]:1 name[text]:'a'",
+      0x120L -> "COMMIT 720")
+    // streamed once the first batch is acked: fewer lines than the
+    // client buffer, so the source admits them only at the flush age,
+    // after processAllAvailable has already seen a poll with no data
+    val tail = Seq(
+      0x200L -> "BEGIN 721",
+      0x210L -> "table public.users: INSERT: id[integer]:2 name[text]:'b'",
+      0x220L -> "COMMIT 721")
+    val srv = new FakePgServer(Nil, connScripts = Seq(FakeConn(head, tailAfterFirstAck = tail)))
+    val spool = Files.createTempDirectory("graft_cli_tail_spool").toString
+    val outDir = Files.createTempDirectory("graft_cli_tail_out").toString
+    val ckpt = Files.createTempDirectory("graft_cli_tail_ckpt").toString
+    try {
+      val c = Main.parse(Seq("replicate", "s3",
+        "--host", "127.0.0.1", "--port", srv.port.toString,
+        "--user", "u", "--dbname", "db", "--slot", "cli_tail",
+        "--spool-dir", spool, "--out-path", outDir, "--checkpoint", ckpt,
+        "--batch-flush-max-age", "3000", "--once")).toOption.get
+      assert(Main.run(c, Some(() => TestSpark.spark)) == 0)
+
+      val ids = TestSpark.spark.read.text(outDir + "/*/*/*/*/*.gz").collect()
+        .flatMap(r => """"id":\{"new":\{"v":"(\d+)"""".r.findFirstMatchIn(r.getString(0)))
+        .map(_.group(1).toInt).toSet
+      // the run acks its final COMMIT, and every line at or below the
+      // highest acked LSN reached the sink
+      assert(awaitTrue()(srv.acks.contains(0x220L)), s"acks ${srv.acks}")
+      val acked = srv.acks.asScala.foldLeft(0L)(math.max)
+      val ackedIds = (head ++ tail).collect {
+        case (w, l) if w <= acked && l.contains("INSERT") => """id\[integer\]:(\d+)""".r
+          .findFirstMatchIn(l).get.group(1).toInt
+      }.toSet
+      assert(ackedIds == Set(1, 2) && ackedIds.subsetOf(ids), s"acked ids $ackedIds, delivered $ids")
+    } finally srv.stop()
+  }
+
+  test("replicate kinesis --once: a tail whose sink write fails fails the run and is never acked") {
+    import graft.streaming.{RecordTransport, SendResult, SinkRecord, TransportRegistry}
+    val head = Seq(
+      0x100L -> "BEGIN 730",
+      0x110L -> "table public.users: INSERT: id[integer]:1 name[text]:'a'",
+      0x120L -> "COMMIT 730")
+    val tail = Seq(
+      0x200L -> "BEGIN 731",
+      0x210L -> "table public.users: INSERT: id[integer]:2 name[text]:'b'",
+      0x220L -> "COMMIT 731")
+    val srv = new FakePgServer(Nil, connScripts = Seq(FakeConn(head, tailAfterFirstAck = tail)))
+    val spool = Files.createTempDirectory("graft_cli_fail_spool").toString
+    val ckpt = Files.createTempDirectory("graft_cli_fail_ckpt").toString
+    // the tail's record fails its write outright (no retryable result),
+    // killing the query while the drain waits for the tail's commit
+    TransportRegistry.register("kinesis") { _ =>
+      new RecordTransport {
+        override def send(records: Seq[SinkRecord]): SendResult =
+          if (records.exists(r => new String(r.payload, "UTF-8").contains(""""v":"2"""")))
+            throw new java.io.IOException("tail write refused")
+          else SendResult(Nil)
+      }
+    }
+    try {
+      val c = Main.parse(Seq("replicate", "kinesis",
+        "--host", "127.0.0.1", "--port", srv.port.toString,
+        "--user", "u", "--dbname", "db", "--slot", "cli_fail",
+        "--kinesis-stream", "wal-stream", "--aws-region", "us-east-1",
+        "--spool-dir", spool, "--checkpoint", ckpt,
+        "--batch-flush-max-age", "1000", "--once")).toOption.get
+      // `main` maps a throwing run to exit code 1
+      intercept[Exception](Main.run(c, Some(() => TestSpark.spark)))
+      // the head was acked (that is what released the tail), the tail never
+      assert(awaitTrue()(srv.acks.contains(0x120L)), s"acks ${srv.acks}")
+      Thread.sleep(200)
+      assert(srv.acks.asScala.forall(_ < 0x200L), s"acks ${srv.acks}")
+    } finally {
+      TransportRegistry.unregister("kinesis")
+      srv.stop()
+    }
   }
 
   test("replicate stdout --once with --spool-compact-segments bounds spool disk") {

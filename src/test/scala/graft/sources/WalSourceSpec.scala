@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -63,6 +64,31 @@ class WalSourceSpec extends AnyFunSuite {
     Files.move(java.nio.file.Paths.get(dir, "001.wal"), java.nio.file.Paths.get(dir, ".001.wal"))
     assert(WalSource.countLines(dir) == 2)
     assert(WalSource.readLines(dir, 0, 2) == Seq("a", "b"))
+    // a start line padded to other than 12 digits is refused too: a
+    // poll probes for the next segment by its canonical name
+    writeSegment(dir, "0000000000002.wal", Seq("c"))
+    val e = intercept[IllegalStateException](WalSource.countLines(dir))
+    assert(e.getMessage.contains("0000000000002.wal"), e.getMessage)
+  }
+
+  test("idle polls count the spool without listing it; a new segment or a vanished tail re-lists") {
+    val dir = Files.createTempDirectory("graft_wal_listings").toString
+    val counter = new WalSource.LineCounter(dir)
+    assert(counter.count() == 0 && counter.listings == 1)
+    writeSegment(dir, "000000000000.wal", Seq("a", "b"))
+    assert(counter.count() == 2 && counter.listings == 2)
+    for (_ <- 1 to 50) assert(counter.count() == 2)
+    assert(counter.listings == 2)
+    // the tail grows in place: counted again, still not listed
+    writeSegment(dir, "000000000000.wal", Seq("a", "b", "c"))
+    assert(counter.count() == 3 && counter.listings == 2)
+    // the segment named by the tail's end appears: the tail was closed
+    writeSegment(dir, "000000000003.wal", Seq("d"))
+    assert(counter.count() == 4 && counter.listings == 3)
+    assert(counter.count() == 4 && counter.listings == 3)
+    // the known tail vanishes (a spool reset): re-listed, not failed
+    Files.delete(java.nio.file.Paths.get(dir, "000000000003.wal"))
+    assert(counter.count() == 3 && counter.listings == 4)
   }
 
   test("a closed segment whose line count differs from the next start minus its own is refused") {
@@ -81,6 +107,41 @@ class WalSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("latestOffset admits by the flush rule: a full buffer at once, a partial range at the flush age") {
+    val dir = Files.createTempDirectory("graft_wal_flush").toString
+    val acks = new ArrayBuffer[Long]()
+    WalSource.ackHooks.put(dir, lsn => acks.synchronized { acks += lsn })
+    val flushAge = 1000L
+    val stream = new WalMicroBatchStream(dir, Some(4), 0L, flushAge)
+    val limit = stream.getDefaultReadLimit
+    assert(limit == ReadLimit.compositeLimit(Array(
+      ReadLimit.minRows(4L, flushAge), ReadLimit.maxRows(4L))))
+    def next(from: Offset): WalOffset = stream.latestOffset(from, limit).asInstanceOf[WalOffset]
+    try {
+      // the first call of a run admits a partial range at once
+      writeSegment(dir, "000000000000.wal", Seq("BEGIN 1", "x", "y"))
+      val first = next(stream.initialOffset())
+      assert(first.lsn == 3 && first.txn == "1")
+      assert(acks.synchronized(acks.isEmpty))
+
+      // a later partial range waits for the flush age, and the
+      // committed frontier is acked while it waits
+      writeSegment(dir, "000000000003.wal", Seq("COMMIT 1", "BEGIN 2"))
+      assert(next(first) == first)
+      assert(acks.synchronized(acks.toSeq) == Seq(3L))
+      Thread.sleep(flushAge + 50L)
+      val second = next(first)
+      assert(second.lsn == 5 && second.txn == "2")
+
+      // n pending lines are admitted at once, capped at n
+      writeSegment(dir, "000000000005.wal", (1 to 6).map(i => s"z$i"))
+      assert(next(second).lsn == 9)
+      assert(acks.synchronized(acks.toSeq) == Seq(3L, 5L))
+      // ReadAllAvailable admits everything pending
+      assert(stream.latestOffset(second, ReadLimit.allAvailable()).asInstanceOf[WalOffset].lsn == 11)
+    } finally WalSource.ackHooks.remove(dir)
+  }
+
   test("wal source: LSN offsets, txn stamping across batches, commit acks") {
     val dir = Files.createTempDirectory("graft_wal").toString
     writeSegment(dir, "000000000000.wal", Seq(
@@ -96,7 +157,7 @@ class WalSourceSpec extends AnyFunSuite {
     WalSource.ackHooks.put(dir, lsn => acks.synchronized { acks += lsn })
 
     // 3 lines per trigger → stamping must survive micro-batch cuts
-    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(3))
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(3), flushAgeMillis = 0)
     val out = CdcPipeline.transform(src,
       CdcConfig(partitionMethod = Partitioner.Transaction))
     val q = out.writeStream.format("memory").queryName("wal_test")
@@ -154,7 +215,7 @@ class WalSourceSpec extends AnyFunSuite {
 
     val acks = new ArrayBuffer[Long]()
     WalSource.ackHooks.put(dir, lsn => acks.synchronized { acks += lsn })
-    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(4))
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(4), flushAgeMillis = 0)
     val q = CdcPipeline.transform(src, CdcConfig())
       .writeStream.format("memory").queryName("wal_idle_ack")
       .outputMode("append").start()

@@ -15,14 +15,16 @@ import PgWire._
   */
 /** Per-connection behavior script: frames to stream, an optional
   * injected ErrorResponse after N frames (connection then closed, like
-  * a real server failing mid-stream), and the IDENTIFY_SYSTEM xlogpos.
+  * a real server failing mid-stream), the IDENTIFY_SYSTEM xlogpos, and
+  * frames held back until the client first acks a nonzero LSN.
   */
 final case class FakeConn(
     xlog: Seq[(Long, String)],
     errorAfterFrames: Int = -1, // send ErrorResponse then close
     dropAfterFrames: Int = -1, // close the socket with no error frame
     xlogpos: String = "0/100",
-    rapidKeepalives: Int = 0) // back-to-back reply-requested keepalives after frames
+    rapidKeepalives: Int = 0, // back-to-back reply-requested keepalives after frames
+    tailAfterFirstAck: Seq[(Long, String)] = Nil)
 
 final class FakePgServer(
     xlog: Seq[(Long, String)], // (walStart, test_decoding line)
@@ -242,19 +244,22 @@ final class FakePgServer(
               // CopyBothResponse: overall format 0, zero columns
               writeMsg(out, Tpe.CopyBothResponse,
                 new Builder().byte(0).byte(0).byte(0).result())
+              def sendXLog(walStart: Long, line: String): Unit = {
+                val bytes = line.getBytes("UTF-8")
+                val b = new Builder()
+                  .byte(CopyTag.XLogData)
+                  .int64(walStart).int64(walStart + bytes.length)
+                  .int64(nowPgMicros())
+                  .bytes(bytes)
+                writeMsg(out, Tpe.CopyData, b.result())
+              }
               var sent = 0
               val frameCap =
                 Seq(script.errorAfterFrames, script.dropAfterFrames).filter(_ >= 0)
                   .reduceOption(math.min).getOrElse(Int.MaxValue)
               script.xlog.foreach { case (walStart, line) =>
                 if (sent < frameCap) {
-                  val bytes = line.getBytes("UTF-8")
-                  val b = new Builder()
-                    .byte(CopyTag.XLogData)
-                    .int64(walStart).int64(walStart + bytes.length)
-                    .int64(nowPgMicros())
-                    .bytes(bytes)
-                  writeMsg(out, Tpe.CopyData, b.result())
+                  sendXLog(walStart, line)
                   sent += 1
                 }
               }
@@ -286,6 +291,7 @@ final class FakePgServer(
                 writeMsg(out, Tpe.CopyData, k.result())
               }
               // Drain standby status updates until the client goes away.
+              var tail = script.tailAfterFirstAck
               var draining = true
               while (draining) {
                 val cm =
@@ -297,6 +303,10 @@ final class FakePgServer(
                     if (r.byte() == CopyTag.StandbyStatusUpdate) {
                       val walWritten = r.int64()
                       acks.add(walWritten)
+                      if (walWritten > 0 && tail.nonEmpty) {
+                        tail.foreach { case (w, l) => sendXLog(w, l) }
+                        tail = Nil
+                      }
                     }
                   case Tpe.Terminate => draining = false; open = false
                   case _ => ()

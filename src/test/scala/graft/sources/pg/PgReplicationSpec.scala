@@ -137,7 +137,7 @@ class PgReplicationSpec extends AnyFunSuite {
       receiver.start("s", 0L)
       assert(receiver.awaitLines(txnLines.size.toLong))
 
-      val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(3))
+      val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(3), flushAgeMillis = 0)
       val out = CdcPipeline.transform(src,
         CdcConfig(partitionMethod = Partitioner.Transaction))
       q = out.writeStream.format("memory").queryName("pg_e2e")
@@ -243,7 +243,7 @@ class PgReplicationSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_pg_restart_ckpt").toString
 
     def startQuery() = {
-      val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(2))
+      val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(2), flushAgeMillis = 0)
       CdcPipeline.transform(src, CdcConfig(partitionMethod = Partitioner.Transaction))
         .where(org.apache.spark.sql.functions.col("json").isNotNull)
         .select("json")

@@ -140,7 +140,8 @@ class SpoolCompactionSpec extends AnyFunSuite {
       assert(r.awaitLines(lines.size.toLong))
 
       val out = Files.createTempDirectory("graft_compact_out").toString
-      val src = graft.streaming.CdcPipeline.fromWalSource(spark, d, maxLinesPerTrigger = Some(3))
+      val src = graft.streaming.CdcPipeline.fromWalSource(spark, d,
+        maxLinesPerTrigger = Some(3), flushAgeMillis = 0)
       val q = src.writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).outputMode("append").start()
       q.processAllAvailable()

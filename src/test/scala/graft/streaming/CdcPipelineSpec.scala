@@ -73,4 +73,64 @@ class CdcPipelineSpec extends AnyFunSuite {
     val back = spark.read.text(dir)
     assert(back.count() == 2)
   }
+
+  test("a committed batch is acked at the next poll, not a trigger interval later") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import graft.sources.{WalOffset, WalSource}
+    val dir = java.nio.file.Files.createTempDirectory("graft_ack_prompt").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ack_prompt_ckpt").toString
+    def segment(start: Int, txn: Int): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, WalSource.segmentName(start)),
+        (Seq(s"BEGIN $txn", s"table public.users: INSERT: id[integer]:$txn", s"COMMIT $txn")
+          .mkString("", "\n", "\n")).getBytes("UTF-8"))
+    segment(0, 1)
+
+    // wall-clock ms: ack times from the hook, batch ends (start +
+    // triggerExecution) and end lines from the progress events
+    val acks = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    WalSource.ackHooks.put(dir, lsn => acks.add((lsn, System.currentTimeMillis())))
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        if (p.numInputRows > 0) ends.add((WalOffset.fromJson(p.sources.head.endOffset).lsn,
+          java.time.Instant.parse(p.timestamp).toEpochMilli + p.durationMs.get("triggerExecution")))
+      }
+    }
+    spark.streams.addListener(listener)
+    val cdc = CdcConfig()
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(10000))
+    val q = CdcPipeline.toTransport(CdcPipeline.transform(src, cdc).where(col("json").isNotNull),
+      BatchCaps.kinesis, () => new InMemoryTransport(), cdc)
+      .option("checkpointLocation", ckpt).start()
+    def ackedAt(lsn: Long): Option[Long] = {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!acks.asScala.exists(_._1 >= lsn) && System.nanoTime() < deadline) Thread.sleep(5)
+      acks.asScala.find(_._1 >= lsn).map(_._2)
+    }
+    try {
+      // the first batch warms the plan; the second is timed
+      assert(ackedAt(3L).nonEmpty)
+      segment(3, 2)
+      val acked = ackedAt(6L)
+      assert(acked.nonEmpty, s"line 6 never acked: ${acks.asScala}")
+      // progress events reach listeners asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!ends.asScala.exists(_._1 == 6L) && System.nanoTime() < deadline) Thread.sleep(5)
+      val end = ends.asScala.collectFirst { case (6L, t) => t }
+      assert(end.nonEmpty, s"no progress event ends at line 6: ${ends.asScala}")
+      // a poll acks within milliseconds; a trigger-bound ack comes a
+      // whole interval (1 s) later. The bound leaves room for GC pauses
+      // and a loaded host between those two.
+      val lag = acked.get - end.get
+      assert(lag <= 500L, s"acked $lag ms after its batch ended")
+    } finally {
+      q.stop()
+      spark.streams.removeListener(listener)
+      WalSource.ackHooks.remove(dir)
+    }
+  }
 }

@@ -78,7 +78,7 @@ class GoldenParitySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "000000000000.wal"),
       walLines.mkString("\n").getBytes("UTF-8"))
-    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(5))
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(5), flushAgeMillis = 0)
     val out = CdcPipeline.transform(src, CdcConfig(partitionMethod = Partitioner.TableName))
     val q = out.writeStream.format("memory").queryName("golden_parity")
       .outputMode("append").start()

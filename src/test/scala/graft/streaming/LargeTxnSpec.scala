@@ -32,7 +32,7 @@ class LargeTxnSpec extends AnyFunSuite {
     Files.write(Paths.get(walDir, "000000000000.wal"), lines.toString.getBytes("UTF-8"))
 
     val t0 = System.nanoTime()
-    val src = CdcPipeline.fromWalSource(spark, walDir, maxLinesPerTrigger = Some(20000))
+    val src = CdcPipeline.fromWalSource(spark, walDir, maxLinesPerTrigger = Some(20000), flushAgeMillis = 0)
     val out = CdcPipeline.transform(src, CdcConfig(partitionMethod = Partitioner.Transaction))
     val q = out.writeStream.format("memory").queryName("large_txn")
       .outputMode("append").start()

@@ -31,7 +31,7 @@ class RestartSpec extends AnyFunSuite {
 
     val cfg = CdcConfig(partitionMethod = Partitioner.TableName)
     def startQuery() = {
-      val src = CdcPipeline.fromWalSource(spark, walDir, maxLinesPerTrigger = Some(7))
+      val src = CdcPipeline.fromWalSource(spark, walDir, maxLinesPerTrigger = Some(7), flushAgeMillis = 0)
       CdcPipeline.transform(src, cfg)
         .where(org.apache.spark.sql.functions.col("json").isNotNull)
         .select("json")
