@@ -480,7 +480,7 @@ object Main {
               case "transaction" => KafkaKeyMode.Transaction
               case "tablename" => KafkaKeyMode.TableName
               case "random" => KafkaKeyMode.Random // validate() rejects others
-            }, c.checkpoint)
+            }, c.checkpoint, c.workers)
           case "kinesis" | "rabbitmq" =>
             import graft.streaming.{BatchCaps, EpochTracker, TransportRegistry, TransportSpec}
             val sinkName = c.sink

@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,6 +40,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * the current BEGIN's txn id + a time-based re-delivery discriminator
   * ride in the offset, so stamping survives micro-batch boundaries and
   * restarts.
+  *
+  * Each admitted range is planned as k = min(default parallelism,
+  * lines) contiguous slices, one per task slot, so parse, marshal and
+  * the sink's write run on every core. The driver's stamping scan cuts
+  * them: each slice carries the stamp in force at its first line and
+  * the byte offset that line starts at, so its task seeks there and
+  * reads only its own lines. The slices keep WAL order among them; how
+  * each sink keeps the reference's order is stated in
+  * [[graft.streaming.CdcPipeline]].
   *
   * The WAL byte stream itself comes from a spool directory whose format
   * the [[WalSource]] object owns: segments named by their global start
@@ -169,44 +179,164 @@ object WalSource {
     val memo = tailMemo
     if (memo._1 == key) memo._2
     else {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val n = try src.getLines().size.toLong finally src.close()
+      val n = newlineCount(f)
       tailMemo = (key, n)
       n
     }
   }
 
-  def readLines(path: String, from: Long, until: Long): Seq[String] = retryOnVanish {
-    val out = mutable.ArrayBuffer[String]()
-    val segs = if (from < until) segments(path) else IndexedSeq.empty
-    if (segs.nonEmpty && from < segs.head.start)
-      throw new IllegalStateException(
-        s"offset $from precedes the compacted base ${segs.head.start} of spool $path: " +
-          "those lines were acked and removed; restart from a checkpoint at or past the base")
-    var i = segs.lastIndexWhere(_.start <= from)
-    while (i >= 0 && i < segs.length && segs(i).start < until) {
-      val seg = segs(i)
-      val closed = i + 1 < segs.length
-      val end = if (closed) segs(i + 1).start else Long.MaxValue
-      val src = scala.io.Source.fromFile(seg.file, "UTF-8")
-      try {
-        val it = src.getLines()
-        var n = seg.start
-        while (n < until && n < end && it.hasNext) {
-          val l = it.next()
-          if (n >= from) out += l
-          n += 1
-        }
-        // a read that passes through a closed segment checks that it
-        // holds exactly the lines its name and the next one's promise
-        if (closed && n < until && (n < end || it.hasNext))
-          throw new IllegalStateException(
-            s"segment ${seg.file.getName} of spool $path does not hold exactly lines " +
-              s"[${seg.start}, $end), as its name and the next segment's name promise")
-      } finally src.close()
-      i += 1
+  /** Lines in `f` as [[LineReader]] splits them: one per '\n' byte,
+    * plus a last line that ends at EOF without one.
+    */
+  private def newlineCount(f: java.io.File): Long = {
+    val in = new java.io.FileInputStream(f)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      var n = 0L
+      var last: Byte = '\n'
+      var r = in.read(buf)
+      while (r > 0) {
+        var j = 0
+        while (j < r) { if (buf(j) == '\n') n += 1; j += 1 }
+        last = buf(r - 1)
+        r = in.read(buf)
+      }
+      if (last != '\n') n + 1 else n
+    } finally in.close()
+  }
+
+  /** Where a spool line starts: its segment's start line and its byte
+    * offset in that segment. Segments are append-only, so a line keeps
+    * its position until compaction deletes its segment.
+    */
+  final case class LinePos(segment: Long, byte: Long)
+
+  /** Reads the lines [from, until) of a spool in order, as raw bytes
+    * split on '\n' (a last line without one ends at EOF). Given `at`,
+    * where line `from` starts, it seeks there; otherwise it reads from
+    * the first line of `from`'s segment. A read that passes through a
+    * closed segment checks that it holds exactly the lines its name and
+    * the next segment's name promise. Not thread-safe.
+    */
+  final class LineReader(path: String, from: Long, until: Long, at: Option[LinePos] = None)
+      extends AutoCloseable {
+    private var segs = IndexedSeq.empty[Segment]
+    private var i = -1
+    private var in: java.io.FileInputStream = _
+    private var buf = new Array[Byte](1 << 16)
+    private var lo = 0 // next unread byte of buf
+    private var hi = 0 // end of the bytes read into buf
+    private var bufByte = 0L // file offset of buf(0)
+    private var n = 0L // ordinal of the segment's next line
+    private var segEnd = 0L // the start of the next segment
+    private var lineFrom = 0
+    private var lineTo = 0
+    private var terminated = false
+
+    /** The current line: a fresh array per line, its global ordinal,
+      * and the byte offset where it starts in segment `lineSegment`.
+      */
+    var line: Array[Byte] = _
+    var lineNo: Long = -1L
+    var lineByte: Long = -1L
+    def lineSegment: Long = segs(i).start
+    def pos: LinePos = LinePos(lineSegment, lineByte)
+
+    /** Where the line after the current one starts, when that is known
+      * without reading on: the current line ended with '\n'.
+      */
+    def nextPos: Option[LinePos] =
+      if (lineNo >= 0 && terminated) Some(LinePos(lineSegment, lineByte + line.length + 1))
+      else None
+
+    retryOnVanish {
+      segs = if (from < until) segments(path) else IndexedSeq.empty
+      if (segs.nonEmpty && from < segs.head.start)
+        throw new IllegalStateException(
+          s"offset $from precedes the compacted base ${segs.head.start} of spool $path: " +
+            "those lines were acked and removed; restart from a checkpoint at or past the base")
+      val hinted = at.map(p => segs.indexWhere(_.start == p.segment)).filter(k => k >= 0 && segs(k).start <= from)
+      hinted match {
+        case Some(k) => open(k, at.get.byte, from)
+        case None =>
+          val k = segs.lastIndexWhere(_.start <= from)
+          if (k >= 0) open(k, 0L, segs(k).start)
+      }
     }
-    out.toSeq
+
+    private def open(k: Int, byte: Long, first: Long): Unit = {
+      val f = new java.io.FileInputStream(segs(k).file)
+      if (byte > 0) f.getChannel.position(byte)
+      in = f
+      i = k
+      bufByte = byte
+      lo = 0
+      hi = 0
+      n = first
+      segEnd = if (k + 1 < segs.length) segs(k + 1).start else Long.MaxValue
+    }
+
+    /** Finds the open segment's next line in `buf` at [lineFrom, lineTo);
+      * false at its end.
+      */
+    private def nextInSegment(): Boolean = {
+      var j = lo
+      while (true) {
+        while (j < hi && buf(j) != '\n') j += 1
+        if (j < hi) {
+          lineFrom = lo; lineTo = j; lo = j + 1; terminated = true
+          return true
+        }
+        if (lo > 0) {
+          System.arraycopy(buf, lo, buf, 0, hi - lo)
+          bufByte += lo; j -= lo; hi -= lo; lo = 0
+        }
+        if (hi == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        val r = in.read(buf, hi, buf.length - hi)
+        if (r < 0) {
+          if (hi == lo) return false
+          lineFrom = lo; lineTo = hi; lo = hi; terminated = false
+          return true
+        }
+        hi += r
+      }
+      false
+    }
+
+    def next(): Boolean = {
+      while (in != null && n < until) {
+        if (n < segEnd && nextInSegment()) {
+          n += 1
+          if (n > from) {
+            lineNo = n - 1
+            lineByte = bufByte + lineFrom
+            line = java.util.Arrays.copyOfRange(buf, lineFrom, lineTo)
+            return true
+          }
+        } else {
+          val closed = i + 1 < segs.length
+          if (closed && (n < segEnd || nextInSegment()))
+            throw new IllegalStateException(
+              s"segment ${segs(i).file.getName} of spool $path does not hold exactly lines " +
+                s"[${segs(i).start}, $segEnd), as its name and the next segment's name promise")
+          in.close()
+          in = null
+          if (closed) open(i + 1, 0L, segEnd)
+        }
+      }
+      false
+    }
+
+    override def close(): Unit = if (in != null) { in.close(); in = null }
+  }
+
+  def readLines(path: String, from: Long, until: Long): Seq[String] = {
+    val r = new LineReader(path, from, until)
+    try {
+      val out = mutable.ArrayBuffer[String]()
+      while (r.next()) out += new String(r.line, java.nio.charset.StandardCharsets.UTF_8)
+      out.toSeq
+    } finally r.close()
   }
 
   /** One poller's line count of a spool, listing the spool only when
@@ -240,13 +370,19 @@ object WalSource {
 
 /** Transaction stamping state (O4) rolled forward line by line: a
   * `BEGIN <xid>` line opens a transaction, and every line up to the
-  * next BEGIN carries its txn id and time-based key.
+  * next BEGIN carries its txn id and time-based key. Both are built
+  * once per BEGIN, as the `UTF8String`s the source's rows carry.
   */
-private[graft] final class TxnStamp(var txn: String, var tbk: String, epochNanos: Long) {
-  def advance(line: String): Unit =
-    if (line.startsWith("BEGIN ")) {
-      txn = line.substring(6).trim
-      tbk = s"$txn-$epochNanos"
+private[graft] final class TxnStamp(txn0: String, tbk0: String, epochNanos: Long) {
+  var txn: UTF8String = UTF8String.fromString(txn0)
+  var tbk: UTF8String = UTF8String.fromString(tbk0)
+
+  def advance(line: Array[Byte]): Unit =
+    if (line.length >= 6 && line(0) == 'B' && line(1) == 'E' && line(2) == 'G' &&
+        line(3) == 'I' && line(4) == 'N' && line(5) == ' ') {
+      val id = new String(line, 6, line.length - 6, java.nio.charset.StandardCharsets.UTF_8).trim
+      txn = UTF8String.fromString(id)
+      tbk = UTF8String.fromString(s"$id-$epochNanos")
     }
 }
 
@@ -290,11 +426,15 @@ class WalScan(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long,
               flushAgeMillis: Long) extends Scan {
   override def readSchema(): StructType = WalSource.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WalMicroBatchStream(path, maxLinesPerTrigger, epochNanos, flushAgeMillis)
+    new WalMicroBatchStream(path, maxLinesPerTrigger, epochNanos, flushAgeMillis,
+      SparkSession.active.sparkContext.defaultParallelism)
 }
 
+/** @param slots the task slots a range is cut into slices for: the
+  *              session's default parallelism (`local[N]`, `--cores`)
+  */
 class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNanos: Long,
-                          flushAgeMillis: Long)
+                          flushAgeMillis: Long, slots: Int)
   extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = WalOffset(0L, "", "")
@@ -320,6 +460,16 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
   /** The spool's line count, polled without listing an unchanged spool. */
   private[graft] val lines = new WalSource.LineCounter(path)
 
+  /** The slices of the last range admitted, keyed by its start and end
+    * line: [[planInputPartitions]] of that range reuses them.
+    */
+  private var planned: Option[(WalOffset, Long, Array[InputPartition])] = None
+
+  /** Where the line after the last range scanned starts, when known: the
+    * next scan seeks there instead of reading its segment from the top.
+    */
+  private var frontier: Option[(Long, WalSource.LinePos)] = None
+
   /** Admission control by the flush rule: under the default limit, a
     * poll admits `min(pending, n)` lines once n are pending or the last
     * admission is at least `flushAgeMillis` old (the first poll of a run
@@ -327,7 +477,7 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
     * everything pending. It rolls the stamping state forward over the
     * admitted range (driver-side scan of just that slice — the live
     * protocol provider tracks this state for free as it consumes the
-    * socket).
+    * socket), and the same scan cuts the range into its slices.
     *
     * This is also the single ack site. The engine calls it on every
     * poll, and only once the batch ending at `start` is in the commit
@@ -355,19 +505,61 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
     else {
       lastAdmitNanos = Some(now)
       val end = s.lsn + admitted
-      val stamp = new TxnStamp(s.txn, s.timeBasedKey, epochNanos)
-      WalSource.readLines(path, s.lsn, end).foreach(stamp.advance)
-      WalOffset(end, stamp.txn, stamp.tbk)
+      val (slices, stamp) = slice(s, end)
+      planned = Some((s, end, slices))
+      WalOffset(end, stamp.txn.toString, stamp.tbk.toString)
     }
   }
 
+  /** Reads [s, end) once, rolling the stamp forward, and cuts it into
+    * k = min(slots, end - s) contiguous slices of near-equal length.
+    * Each slice carries the stamp in force at its first line (the state
+    * after the line before it) and where that line starts, so its reader
+    * seeks there instead of reading the lines before it.
+    *
+    * @return the slices and the stamp in force after line `end - 1`
+    */
+  private def slice(s: WalOffset, end: Long): (Array[InputPartition], TxnStamp) = {
+    val total = end - s.lsn
+    val k = math.min(slots.toLong, total).toInt
+    val cuts = Array.tabulate(k + 1)(j => if (k == 0) s.lsn else s.lsn + total * j / k)
+    val stamp = new TxnStamp(s.txn, s.timeBasedKey, epochNanos)
+    val out = new Array[InputPartition](k)
+    def cut(j: Int, at: Option[WalSource.LinePos]): Unit =
+      out(j) = WalInputPartition(path, cuts(j), cuts(j + 1), stamp.txn.toString,
+        stamp.tbk.toString, epochNanos, at)
+    val r = new WalSource.LineReader(path, s.lsn, end,
+      frontier.collect { case (line, at) if line == s.lsn => at })
+    var j = 0
+    try {
+      while (r.next()) {
+        if (j < k && r.lineNo == cuts(j)) { cut(j, Some(r.pos)); j += 1 }
+        stamp.advance(r.line)
+      }
+      frontier = r.nextPos.filter(_ => r.lineNo == end - 1).map(end -> _)
+    } finally r.close()
+    // a spool shorter than the range (cut back by the receiver's
+    // torn-write repair) leaves its last slices empty
+    while (j < k) { cut(j, None); j += 1 }
+    (out, stamp)
+  }
+
+  /** The ordering contract: each slice is a contiguous run of the WAL,
+    * in order, and slice j precedes slice j + 1 — the reference's single
+    * ordered reader, cut at k - 1 lines. A sink that writes per task
+    * keeps that order within each slice (the gzip sink's part files); a
+    * sink with `--workers` ordered writers coalesces the slices back into
+    * one ordered task first (see [[graft.streaming.CdcPipeline]]). A
+    * range admitted by this stream reuses its scan; any other (a batch
+    * replayed after a restart) is scanned again.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[WalOffset]
     val e = end.asInstanceOf[WalOffset]
-    // ONE ordered partition per batch: WAL is a totally ordered stream
-    // read from a single connection (reference semantics). Parallelism
-    // comes after the source (filter/marshal fan out per partition key).
-    Array(WalInputPartition(path, s.lsn, e.lsn, s.txn, s.timeBasedKey, epochNanos))
+    planned match {
+      case Some((ps, pe, slices)) if ps == s && pe == e.lsn => slices
+      case _ => slice(s, e.lsn)._1
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -384,31 +576,35 @@ class WalMicroBatchStream(path: String, maxLinesPerTrigger: Option[Int], epochNa
   override def stop(): Unit = ()
 }
 
+/** One slice [from, until) of an admitted range: the stamp in force at
+  * line `from` and, when known, where that line starts in the spool.
+  */
 case class WalInputPartition(path: String, from: Long, until: Long,
                              startTxn: String, startTbk: String,
-                             epochNanos: Long) extends InputPartition
+                             epochNanos: Long, at: Option[WalSource.LinePos]) extends InputPartition
 
 class WalReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WalInputPartition]
     new PartitionReader[InternalRow] {
-      private val lines = WalSource.readLines(p.path, p.from, p.until).iterator
-      private var lsn = p.from
+      private val lines = new WalSource.LineReader(p.path, p.from, p.until, p.at)
       private val stamp = new TxnStamp(p.startTxn, p.startTbk, p.epochNanos)
-      private var current: InternalRow = _
+      // one row, refilled per line: the scan's projection copies it out
+      private val row = new GenericInternalRow(WalSource.schema.length)
+      row.setLong(3, 0L)
 
-      override def next(): Boolean = {
-        if (!lines.hasNext) return false
-        val l = lines.next()
-        lsn += 1
-        stamp.advance(l)
-        current = new GenericInternalRow(Array[Any](
-          UTF8String.fromString(l), lsn, lsn, 0L,
-          UTF8String.fromString(stamp.txn), UTF8String.fromString(stamp.tbk)))
+      override def next(): Boolean = lines.next() && {
+        val lsn = lines.lineNo + 1
+        stamp.advance(lines.line)
+        row.update(0, UTF8String.fromBytes(lines.line))
+        row.setLong(1, lsn)
+        row.setLong(2, lsn)
+        row.update(4, stamp.txn)
+        row.update(5, stamp.tbk)
         true
       }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def get(): InternalRow = row
+      override def close(): Unit = lines.close()
     }
   }
 }

@@ -36,7 +36,22 @@ final case class CdcConfig(
   *
   * The whole stateless middle is ONE Catalyst pipeline — parse, filter,
   * key and JSON-render fuse into a single whole-stage-codegen loop per
-  * micro-batch; the only exchange is the optional worker routing.
+  * task; the only exchange is the optional worker routing.
+  *
+  * Ordering contract. The source plans each micro-batch as k contiguous
+  * WAL slices, one per task slot, in order. Spark promises no order in
+  * which a reducer fetches several map outputs, and a streaming frame
+  * cannot be sorted, so each sink keeps the reference's order by plan:
+  *  - the gzip file sink writes one part file per slice, each one
+  *    contiguous WAL slice in order; all parts commit atomically with
+  *    their batch (the file sink's metadata log);
+  *  - sinks whose writer count is `--workers` (transports, Kafka): with
+  *    one worker the slices are coalesced into one task that reads them
+  *    in WAL order; with more, [[transform]] coalesces them before the
+  *    worker exchange, so it reads one ordered map output and each
+  *    worker receives its keys in WAL order;
+  *  - the console sink prints each batch in partition order, which with
+  *    one worker is WAL order.
   */
 object CdcPipeline {
 
@@ -94,7 +109,10 @@ object CdcPipeline {
       .withColumn("json", GraftFunctions.fenced(col("json")))
       .select("operation", "relation", "json", "timeBasedKey", "walStart", "txn", "partitionKey")
       .withColumnRenamed("relation", "table")
-    if (cfg.workers > 1) Router.route(marshalled, cfg.workers, cfg.routing)
+    // one ordered map task feeds the worker exchange (the ordering
+    // contract above); round-robin routing promises no order, and Spark
+    // drops a coalesce directly under its repartition
+    if (cfg.workers > 1) Router.route(marshalled.coalesce(1), cfg.workers, cfg.routing)
     else marshalled
   }
 
@@ -126,8 +144,10 @@ object CdcPipeline {
     * `keyspace/YYYY/MM/DD/HH/...gz` layout (O12,
     * reference transport/transporters/s3). On a cluster, pointing the
     * path at `s3a://bucket/keyspace` is the complete story: one object
-    * per partition file, gzip-compressed, date-bucketed. `cfg` is
-    * unused: the flush age is the source's ([[fromWalSource]]).
+    * per partition file, gzip-compressed, date-bucketed. Each source
+    * slice is its own task, so a batch writes one part file per slice,
+    * compressed in parallel. `cfg` is unused: the flush age is the
+    * source's ([[fromWalSource]]).
     */
   def toGzipFiles(df: DataFrame, path: String, checkpoint: String,
                   cfg: CdcConfig): DataStreamWriter[Row] =
@@ -156,15 +176,23 @@ object CdcPipeline {
     * under the per-sink caps, partial-failure retry under exponential
     * backoff, and the epoch-replay guard for exactly-once across
     * micro-batch replays. The RPC edge is a [[RecordTransport]]
-    * factory, resolved per-partition at `open` time. `cfg` is unused:
-    * the flush age is the source's ([[fromWalSource]]).
+    * factory, resolved per-partition at `open` time. With one worker
+    * (`cfg.workers`) the batch's slices are written by one task in WAL
+    * order; with more, `df` is [[transform]]'s routed frame, one task
+    * per worker. The flush age is the source's ([[fromWalSource]]).
     */
   def toTransport(df: DataFrame, caps: BatchCaps,
                   transportFactory: () => RecordTransport,
                   cfg: CdcConfig,
                   tracker: EpochTracker = EpochTracker.none): DataStreamWriter[Row] =
-    df.writeStream
+    ordered(df, cfg.workers).writeStream
       .foreach(ChunkedSink.foreachWriter(caps, transportFactory, tracker))
+
+  /** One writer task for a single worker, reading the slices in WAL
+    * order; more workers are routed by [[transform]] already.
+    */
+  private def ordered(df: DataFrame, workers: Int): DataFrame =
+    if (workers > 1) df else df.coalesce(1)
 
   /** The kafka writer's full contract — key/value projection for the
     * chosen [[KafkaKeyMode]] plus every option handed to the
@@ -177,9 +205,9 @@ object CdcPipeline {
   final case class KafkaSinkPlan(projected: DataFrame, options: Map[String, String])
 
   def kafkaSinkPlan(df: DataFrame, bootstrap: String, topic: String,
-                    keyMode: KafkaKeyMode, checkpoint: String): KafkaSinkPlan =
+                    keyMode: KafkaKeyMode, checkpoint: String, workers: Int): KafkaSinkPlan =
     KafkaSinkPlan(
-      df.select(
+      ordered(df, workers).select(
         KafkaKeyMode.keyExpr(keyMode).cast("string").as("key"),
         col("json").cast("string").as("value")),
       Map(
@@ -192,10 +220,11 @@ object CdcPipeline {
     * partition-key modes (kafka/batch/batch.go:83-104). Not runnable in
     * this build environment (no spark-sql-kafka connector jar), but the
     * full writer contract is [[kafkaSinkPlan]], which is spec-asserted.
+    * With one worker the batch is produced by one task in WAL order.
     */
   def toKafka(df: DataFrame, bootstrap: String, topic: String,
-              keyMode: KafkaKeyMode, checkpoint: String): DataStreamWriter[Row] = {
-    val plan = kafkaSinkPlan(df, bootstrap, topic, keyMode, checkpoint)
+              keyMode: KafkaKeyMode, checkpoint: String, workers: Int): DataStreamWriter[Row] = {
+    val plan = kafkaSinkPlan(df, bootstrap, topic, keyMode, checkpoint, workers)
     plan.projected.writeStream
       .format("kafka")
       .options(plan.options)

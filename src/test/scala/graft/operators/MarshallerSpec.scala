@@ -23,7 +23,9 @@ class MarshallerSpec extends AnyFunSuite {
   private def marshal(lines: Seq[String], noMarshalOld: Boolean = false): Seq[String] = {
     // stamped in WAL order by the source's own stamper, epochNanos 0
     val stamp = new TxnStamp("", "", 0L)
-    val df = lines.zipWithIndex.map { case (l, i) => stamp.advance(l); (i.toLong, l, stamp.tbk) }
+    val df = lines.zipWithIndex.map { case (l, i) =>
+      stamp.advance(l.getBytes("UTF-8")); (i.toLong, l, stamp.tbk.toString)
+    }
       .toDF("ord", "line", "timeBasedKey")
     val stamped = df
       .select($"ord", $"timeBasedKey", GraftFunctions.parse_test_decoding($"line").as("p"))

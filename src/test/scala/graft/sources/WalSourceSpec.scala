@@ -4,7 +4,10 @@ import java.nio.file.Files
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -107,12 +110,111 @@ class WalSourceSpec extends AnyFunSuite {
     }
   }
 
+  /** The rows (line, walStart, txn, timeBasedKey) of the given slices,
+    * read one after the other by the source's own reader.
+    */
+  private def rowsOf(slices: Array[InputPartition]): Seq[(String, Long, String, String)] = {
+    val factory = new WalReaderFactory
+    slices.toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      val out = ArrayBuffer[(String, Long, String, String)]()
+      try while (r.next()) {
+        val row: InternalRow = r.get()
+        out += ((row.getUTF8String(0).toString, row.getLong(1),
+          row.getUTF8String(4).toString, row.getUTF8String(5).toString))
+      } finally r.close()
+      out
+    }
+  }
+
+  private def admit(stream: WalMicroBatchStream, from: Offset): WalOffset =
+    stream.latestOffset(from, ReadLimit.allAvailable()).asInstanceOf[WalOffset]
+
+  test("a range is planned as min(parallelism, lines) contiguous slices") {
+    val dir = Files.createTempDirectory("graft_wal_k").toString
+    writeSegment(dir, "000000000000.wal", (0 until 10).map(i => s"l$i"))
+    // the session's default parallelism (local[4]) sets k
+    val options = new CaseInsensitiveStringMap(java.util.Map.of("path", dir, "flushAgeMillis", "0"))
+    val scan = new WalSourceProvider().getTable(WalSource.schema, Array.empty,
+      options).asInstanceOf[WalTable].newScanBuilder(options).build()
+    val parallelism = spark.sparkContext.defaultParallelism
+    val stream = scan.toMicroBatchStream("").asInstanceOf[WalMicroBatchStream]
+    for ((from, until) <- Seq((0L, 1L), (1L, 3L), (3L, 10L))) {
+      val s = WalOffset(from, "", "")
+      val slices = stream.planInputPartitions(s, WalOffset(until, "", ""))
+        .map(_.asInstanceOf[WalInputPartition])
+      assert(slices.length == math.min(parallelism.toLong, until - from))
+      assert(slices.head.from == from && slices.last.until == until)
+      slices.sliding(2).filter(_.length == 2).foreach(p => assert(p(0).until == p(1).from))
+      assert(slices.forall(p => p.until - p.from >= (until - from) / slices.length))
+      assert(rowsOf(slices.toArray).map(_._1) == (from until until).map(i => s"l$i"))
+    }
+  }
+
+  test("slices cut mid-transaction, at a BEGIN and from inside a transaction read as one slice does") {
+    // segments: [0, 5) and [5, 14), the last line without a newline
+    val dir = Files.createTempDirectory("graft_wal_slices").toString
+    Files.write(java.nio.file.Paths.get(dir, "000000000000.wal"),
+      Seq("BEGIN 1", "a1", "a2", "a3", "a4").mkString("", "\n", "\n").getBytes("UTF-8"))
+    writeSegment(dir, "000000000005.wal", Seq(
+      "COMMIT 1", "BEGIN 2", "b1", "b2", "b3", "COMMIT 2", "BEGIN 3", "c1", "c2"))
+    // [2, 14) in 4 slices cuts at 2, 5, 8 and 11: the range starts
+    // inside txn 1, line 5 (the segment edge) is mid-txn 1, line 8 is
+    // mid-txn 2, and line 11 is exactly BEGIN 3
+    val start = WalOffset(2L, "1", "1-7")
+    val four = new WalMicroBatchStream(dir, None, 7L, 0L, slots = 4)
+    val end = admit(four, start)
+    assert(end == WalOffset(14L, "3", "3-7"))
+    val slices = four.planInputPartitions(start, end).map(_.asInstanceOf[WalInputPartition])
+    assert(slices.map(p => (p.from, p.until)).toSeq == Seq((2L, 5L), (5L, 8L), (8L, 11L), (11L, 14L)))
+    // the stamp in force at each slice's first line: a slice opening on
+    // a BEGIN carries the transaction before it
+    assert(slices.map(p => (p.startTxn, p.startTbk)).toSeq ==
+      Seq(("1", "1-7"), ("1", "1-7"), ("2", "2-7"), ("2", "2-7")))
+    // each slice knows where its first line starts
+    assert(slices.map(_.at).toSeq == Seq(
+      Some(WalSource.LinePos(0L, 11L)), Some(WalSource.LinePos(5L, 0L)),
+      Some(WalSource.LinePos(5L, 20L)), Some(WalSource.LinePos(5L, 35L))))
+
+    val one = new WalMicroBatchStream(dir, None, 7L, 0L, slots = 1)
+    assert(admit(one, start) == end)
+    val whole = one.planInputPartitions(start, end)
+    assert(whole.length == 1)
+    val expected = rowsOf(whole)
+    assert(expected.map(_._1) == WalSource.readLines(dir, 2L, 14L))
+    assert(expected.map(r => (r._2, r._3)) == Seq(
+      3L -> "1", 4L -> "1", 5L -> "1", 6L -> "1", 7L -> "2", 8L -> "2", 9L -> "2",
+      10L -> "2", 11L -> "2", 12L -> "3", 13L -> "3", 14L -> "3"))
+    assert(rowsOf(slices.toArray) == expected)
+  }
+
+  test("a fresh stream plans the same slices as the stream that admitted the range") {
+    val dir = Files.createTempDirectory("graft_wal_replan").toString
+    writeSegment(dir, "000000000000.wal", (0 until 20).map(i => if (i % 5 == 0) s"BEGIN $i" else s"x$i"))
+    writeSegment(dir, "000000000020.wal", (20 until 45).map(i => if (i % 5 == 0) s"BEGIN $i" else s"x$i"))
+    val admitting = new WalMicroBatchStream(dir, Some(13), 0L, 0L, slots = 3)
+    var from = admitting.initialOffset().asInstanceOf[WalOffset]
+    var ranges = 0
+    while (from.lsn < 45) {
+      // the admitting stream seeks each scan to where the last one ended
+      val to = admitting.latestOffset(from, admitting.getDefaultReadLimit).asInstanceOf[WalOffset]
+      val planned = admitting.planInputPartitions(from, to)
+      val fresh = new WalMicroBatchStream(dir, Some(13), 0L, 0L, slots = 3)
+      assert(fresh.planInputPartitions(from, to).toSeq == planned.toSeq)
+      assert(planned.length == 3)
+      assert(rowsOf(planned).map(_._1) == WalSource.readLines(dir, from.lsn, to.lsn))
+      from = to
+      ranges += 1
+    }
+    assert(ranges == 4 && from == WalOffset(45L, "40", "40-0"))
+  }
+
   test("latestOffset admits by the flush rule: a full buffer at once, a partial range at the flush age") {
     val dir = Files.createTempDirectory("graft_wal_flush").toString
     val acks = new ArrayBuffer[Long]()
     WalSource.ackHooks.put(dir, lsn => acks.synchronized { acks += lsn })
     val flushAge = 1000L
-    val stream = new WalMicroBatchStream(dir, Some(4), 0L, flushAge)
+    val stream = new WalMicroBatchStream(dir, Some(4), 0L, flushAge, slots = 4)
     val limit = stream.getDefaultReadLimit
     assert(limit == ReadLimit.compositeLimit(Array(
       ReadLimit.minRows(4L, flushAge), ReadLimit.maxRows(4L))))

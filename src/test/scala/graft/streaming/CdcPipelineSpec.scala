@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +13,8 @@ import graft.operators.Partitioner
 class CdcPipelineSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
+
+  private val mapper = new ObjectMapper()
 
   private val cfg = CdcConfig(
     filterTables = Seq("public.passwords"),
@@ -72,6 +77,76 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(files.exists(_.getName.startsWith("year=")))
     val back = spark.read.text(dir)
     assert(back.count() == 2)
+  }
+
+  /** A spool of `txns` transactions over 5 tables, one segment; the
+    * lines, and the walStarts of the DML lines among them.
+    */
+  private def spool(txns: Int): (String, Seq[String], Seq[Long]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_spool").toString
+    val wal = (1 to txns).flatMap { x =>
+      Seq(s"BEGIN $x") ++
+        (0 until 3).map(j => s"table public.t${(x + j) % 5}: INSERT: id[integer]:$x v[text]:'$j'") ++
+        Seq(s"COMMIT $x")
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, graft.sources.WalSource.segmentName(0)),
+      wal.mkString("", "\n", "\n").getBytes("UTF-8"))
+    (dir, wal, wal.indices.filter(i => wal(i).startsWith("table ")).map(_ + 1L))
+  }
+
+  test("gzip sink: one part file per source slice, each a contiguous WAL run, together the one-slice output") {
+    val (dir, wal, dml) = spool(40)
+    val out = java.nio.file.Files.createTempDirectory("graft_cdc_parts").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_parts_ckpt").toString
+    val cdc = CdcConfig(partitionMethod = Partitioner.TableName)
+    // one batch: the first poll admits every pending line
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(10000))
+    val q = CdcPipeline.toGzipFiles(CdcPipeline.transform(src, cdc).where(col("json").isNotNull),
+      out, ckpt, cdc).start()
+    try q.processAllAvailable() finally q.stop()
+
+    def lsn(json: String): Long = {
+      val Array(hi, lo) = mapper.readTree(json).get("lsn").asText().split("/")
+      (java.lang.Long.parseLong(hi, 16) << 32) | java.lang.Long.parseLong(lo, 16)
+    }
+    val parts = java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
+      .filter(p => p.getFileName.toString.startsWith("part-") && p.toString.endsWith(".gz"))
+      .map { p =>
+        val in = new java.util.zip.GZIPInputStream(java.nio.file.Files.newInputStream(p))
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+      }.toSeq
+    assert(parts.length == spark.sparkContext.defaultParallelism && parts.length > 1,
+      s"${parts.length} part files")
+    // each part holds a contiguous run of the WAL, in order
+    for (part <- parts) {
+      val starts = part.map(lsn)
+      assert(starts == dml.filter(w => w >= starts.head && w <= starts.last), starts)
+    }
+    // together they are the one-slice output: the batch transform of
+    // the same lines under the source's own stamps
+    val stamp = new graft.sources.TxnStamp("", "", 0L)
+    val single = wal.zipWithIndex.map { case (l, i) =>
+      stamp.advance(l.getBytes("UTF-8"))
+      (l, i + 1L, i + 1L, 0L, stamp.txn.toString, stamp.tbk.toString)
+    }.toDF("line", "walStart", "serverWalEnd", "serverTimeMs", "txn", "timeBasedKey")
+    val expected = CdcPipeline.transform(single, cdc).where(col("json").isNotNull)
+      .select("json").as[String].collect().toSeq
+    assert(parts.flatten.sortBy(lsn) == expected.sortBy(lsn))
+  }
+
+  test("toTransport with one worker delivers from task partition 0 only, in WAL order") {
+    val (dir, _, dml) = spool(60)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_one_worker_ckpt").toString
+    val cdc = CdcConfig(partitionMethod = Partitioner.TableName)
+    val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(100),
+      flushAgeMillis = 0)
+    val q = CdcPipeline.toTransport(CdcPipeline.transform(src, cdc).where(col("json").isNotNull),
+      BatchCaps(50, Long.MaxValue, Long.MaxValue), () => DeliverySpec.open("one-worker"), cdc)
+      .option("checkpointLocation", ckpt).start()
+    try q.processAllAvailable() finally q.stop()
+    val got = DeliverySpec.delivered("one-worker")
+    assert(got.map(_._1).distinct == Seq(0))
+    assert(got.map(_._2.walStart) == dml)
   }
 
   test("a committed batch is acked at the next poll, not a trigger interval later") {

@@ -14,6 +14,8 @@ won, and the change of the medians against the metric's
 
     python3 tools/cdcbench_ab.py --base HEAD --work /tmp/ab --seeds 101-110 \\
         --workloads spool_gzip --name my_ab
+    python3 tools/cdcbench_ab.py --base HEAD --work /tmp/ab --seeds 111-113 \\
+        --workloads spool_gzip --cores 1 --name my_ab_c1
     python3 tools/cdcbench_ab.py --name my_ab --report-only
 
 Run it on an otherwise idle host: the two sides share the machine.
@@ -53,9 +55,11 @@ def export(rev, work):
     return sha, dest
 
 
-def run_one(checkout, workload, seed, seconds, trace):
+def run_one(checkout, workload, seed, seconds, trace, cores):
     cmd = [sys.executable, "cdcbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
+    if cores:
+        cmd += ["--cores", str(cores)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     try:
@@ -133,6 +137,8 @@ def main():
     p.add_argument("--workloads", default="spool_gzip,filtered_fanout")
     p.add_argument("--seconds", type=int, default=8)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    p.add_argument("--cores", type=int, default=None,
+                   help="Spark task threads, local[N], passed to run.py (default: its own)")
     p.add_argument("--what", default=None, help="the evidence file's description")
     p.add_argument("--report-only", action="store_true", help="summarize an existing evidence file")
     a = p.parse_args()
@@ -146,15 +152,16 @@ def main():
     sha, base_dir = export(a.base, os.path.abspath(a.work))
     checkouts = {"parent": base_dir, "change": ROOT}
     doc = {"what": a.what or (
-        "cdcbench interleaved A/B, parent %s vs this change, --seconds %d%s, one run at a time, "
-        "side order alternating per pair" % (sha[:12], a.seconds, ", traced" if a.trace else "")),
+        "cdcbench interleaved A/B, parent %s vs this change, --seconds %d%s%s, one run at a time, "
+        "side order alternating per pair" % (sha[:12], a.seconds, ", traced" if a.trace else "",
+                                              ", --cores %d" % a.cores if a.cores else "")),
         "runs": []}
     for i, seed in enumerate(a.seeds):
         for j, workload in enumerate(a.workloads.split(",")):
             # each workload's side order alternates from seed to seed
             order = SIDES if (i + j) % 2 == 0 else SIDES[::-1]
             for side in order:
-                result = run_one(checkouts[side], workload, seed, a.seconds, a.trace)
+                result = run_one(checkouts[side], workload, seed, a.seconds, a.trace, a.cores)
                 if any("build failed" in l for l in result.get("stderr_tail", [])):
                     # nothing was measured; sbt's server socket path under
                     # <checkout>/cdcbench/target must fit the ~108-byte
