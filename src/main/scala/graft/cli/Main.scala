@@ -352,7 +352,7 @@ object Main {
       },
       noMarshalOldValue = c.noMarshalOldValue,
       workers = c.workers,
-      routing = if (c.routingMethod == "partition") Router.Partition() else Router.RoundRobin,
+      routing = if (c.routingMethod == "partition") Router.Partition else Router.RoundRobin,
       triggerMillis = c.batchFlushMaxAgeMillis)
   }
 

@@ -33,11 +33,10 @@ object CdcFixture {
       concat_ws(" ", keyCols.map(renderCol): _*))
 
   /** Attach synthetic source metadata expected by downstream operators:
-    * walStart (monotone from `ord`), serverWalEnd, serverTimeMs=0 (the
+    * walStart (monotone from `ord`), serverTimeMs=0 (the
     * PG 9–11 shape — exercises the marshaller's epoch fallback).
     */
   def withSourceMeta(df: DataFrame): DataFrame =
     df.withColumn("walStart", col("ord").cast("long"))
-      .withColumn("serverWalEnd", col("ord").cast("long"))
       .withColumn("serverTimeMs", lit(0L))
 }

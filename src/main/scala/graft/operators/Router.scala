@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.operators.Partitioner.{BucketHash, Crc32, Md5}
 
 /** Worker routing / exchange (SURVEY §2 O9; reference
   * transport/batcher/batcher.go:366-416).
@@ -23,16 +22,13 @@ object Router {
 
   sealed trait Mode
   case object RoundRobin extends Mode
-  final case class Partition(hash: BucketHash = Crc32) extends Mode
+  case object Partition extends Mode
 
   def route(df: DataFrame, workers: Int, mode: Mode): DataFrame = mode match {
     case RoundRobin =>
       df.repartition(workers)
-    case Partition(hash) =>
-      val worker = hash match {
-        case Crc32 => GraftFunctions.crc32_bucket(col("partitionKey"), workers)
-        case Md5 => GraftFunctions.md5_bucket(col("partitionKey"), workers)
-      }
-      df.withColumn("workerId", worker).repartition(workers, col("workerId"))
+    case Partition =>
+      df.withColumn("workerId", GraftFunctions.crc32_bucket(col("partitionKey"), workers))
+        .repartition(workers, col("workerId"))
   }
 }

@@ -847,7 +847,16 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 20, minLen: Int = 40, maxGramFreq: Int = 50,
       includeSelf: Boolean = false,
-      strategy: String = SpanIndexAuto): DataFrame = {
+      strategy: String = SpanIndexAuto): DataFrame =
+    repeatedSpans(df, textCol, idCol, k, minLen, maxGramFreq, includeSelf,
+      strategy, WinnowLimits())
+
+  /** [[repeatedSpans]] with explicit winnow-prefilter limits. */
+  private[graft] def repeatedSpans(
+      df: DataFrame, textCol: String, idCol: String,
+      k: Int, minLen: Int, maxGramFreq: Int,
+      includeSelf: Boolean, strategy: String,
+      winnowLimits: WinnowLimits): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
@@ -862,7 +871,7 @@ object Dedup {
     // full-corpus over-cap gram set that keeps maxGramFreq semantics
     // exact — see [[SpanWinnowPrefilterKey]] for the full contract.
     val winnow = resolveWinnowPrefilter(base, textCol, idCol, k, minLen,
-      maxGramFreq, includeSelf)
+      maxGramFreq, includeSelf, winnowLimits)
     val corpus = winnow.map(_._1).getOrElse(base)
     def gramStream = spanGramStream(corpus, textCol, idCol, k)
     lazy val g = gramStream
@@ -969,15 +978,15 @@ object Dedup {
   val SpanIndexBounded = "bounded"
   val SpanIndexWindow = "window"
 
-  /** Conf key overriding the auto-select threshold: estimated
+  /** The auto-select threshold: estimated
     * (id, text) input bytes at or above which `auto` uses the bounded
     * posting-list aggregate. Recalibrated in round 17
-    * (SELECTOR_AB_r17.json): the original 16 MiB default predated the
+    * (SELECTOR_AB_r17.json): the original 16 MiB value predated the
     * packed-posting bounded path and misrouted mid-scale corpora — the
     * same-day A/B measured WINDOW 1.4–1.6× faster at a ~255 KB
     * estimate (sf0.1) and BOUNDED 1.3–1.7× faster at a ~2.5 MB
     * estimate (sf1, confirming the r14 FLOORS observation), so the
-    * default sits at the log-midpoint of that bracket. Note the
+    * threshold sits at the log-midpoint of that bracket. Note the
     * estimate is compressed-parquet-based and column-pruned — ~1 MiB
     * estimated ≈ 20 MB of decoded text. Above the bracket the choice
     * compounds: the bounded form degrades gracefully while the window
@@ -986,12 +995,9 @@ object Dedup {
     * conservatively LARGE, which lands on the scale-safe side.
     *
     * Resolution happens at DataFrame-CONSTRUCTION time (a
-    * `repeatedSpans` call reads this conf and Catalyst's size estimate
-    * once, eagerly) — changing the conf after a frame is built does not
-    * re-route it; build a new frame to pick up the new threshold.
+    * `repeatedSpans` call reads Catalyst's size estimate once, eagerly).
     */
-  val SpanBoundedMinBytesKey = "spark.graft.span.boundedMinBytes"
-  val SpanBoundedMinBytesDefault: Long = 1L * 1024 * 1024
+  val SpanBoundedMinBytes: Long = 1L * 1024 * 1024
 
   /** Conf key (default `true`): pack each bounded-strategy posting as
     * one [[graft.functions.PackIdPos]] long — narrower sorted/spilled
@@ -1035,10 +1041,10 @@ object Dedup {
     *
     * Degrade guards: if `minLen − k + 1 < 2` the prefilter cannot
     * help (w = 1 anchors every gram) and the base path runs; if
-    * phase 0 finds candidates ≥ [[SpanWinnowMaxCandidateFracKey]] of
+    * phase 0 finds candidates ≥ [[DefaultWinnowMaxCandidateFrac]] of
     * the corpus (duplicate-saturated corpora, e.g. ×N-amplified bench
     * sets) the base path runs and only the winnow pass was spent.
-    * Candidate sets ≤ [[SpanWinnowDriverMaxIdsKey]] are collected and
+    * Candidate sets ≤ [[DefaultWinnowDriverMaxIds]] are collected and
     * re-broadcast (8 B/id — the phase-0 jobs then run exactly once);
     * larger sparse sets fall back to a lazy semi-join whose lineage
     * recomputes the anchor pass (≤ 2×) at execution.
@@ -1050,18 +1056,17 @@ object Dedup {
     */
   val SpanWinnowPrefilterKey = "spark.graft.span.winnowPrefilter"
 
-  /** Conf key (default 0.5): candidate-document fraction at or above
-    * which the winnow prefilter bails out to the ungated path —
-    * gating most of the corpus would add the winnow + count passes on
-    * top of a posting pass that barely shrank.
+  /** Candidate-document fraction at or above which the winnow
+    * prefilter bails out to the ungated path — gating most of the
+    * corpus would add the winnow + count passes on top of a posting
+    * pass that barely shrank. At or above 1 the guard is off.
     */
-  val SpanWinnowMaxCandidateFracKey = "spark.graft.span.winnowMaxCandidateFrac"
-  val SpanWinnowMaxCandidateFracDefault = 0.5
+  val DefaultWinnowMaxCandidateFrac = 0.5
 
-  /** Conf key (default 0.01, 0 disables): document fraction for the
-    * density PRE-PROBE that bails out of the prefilter BEFORE the
-    * full anchor pass on duplicate-saturated corpora. The full guard
-    * ([[SpanWinnowMaxCandidateFracKey]]) is exact but pays a complete
+  /** Document fraction (0 disables) for the density PRE-PROBE that
+    * bails out of the prefilter BEFORE the full anchor pass on
+    * duplicate-saturated corpora. The full guard
+    * ([[DefaultWinnowMaxCandidateFrac]]) is exact but pays a complete
     * winnow+count pass just to discover the corpus is dense; the
     * pre-probe runs the same candidate test WITHIN a sampled slice
     * first. Within-sample candidacy implies full-corpus candidacy
@@ -1075,73 +1080,61 @@ object Dedup {
     * probe lets through still faces the exact full guard. Either way the emitted
     * spans are unchanged (the prefilter is result-identical,
     * spec-pinned); only which passes run differs. Samples smaller
-    * than [[SpanWinnowDensitySampleMinDocs]] docs skip the probe
+    * than [[WinnowDensitySampleMinDocs]] docs skip the probe
     * (too noisy to act on).
     */
-  val SpanWinnowDensitySampleFracKey = "spark.graft.span.winnowDensitySampleFrac"
-  val SpanWinnowDensitySampleFracDefault = 0.01
-  val SpanWinnowDensitySampleMinDocs = 500L
+  val DefaultWinnowDensitySampleFrac = 0.01
+  val WinnowDensitySampleMinDocs = 500L
 
-  /** Conf key (default 4 M): largest candidate id set the winnow
-    * prefilter collects to the driver (8 B/id → ≤ 32 MB) and ships
-    * back as a broadcast semi-join — which makes the whole phase-0
-    * pipeline run exactly once, eagerly. Above it the candidate set
-    * stays distributed (lazy semi-join, anchor pass recomputed at
-    * execution).
+  /** Largest candidate id set the winnow prefilter collects to the
+    * driver (8 B/id → ≤ 32 MB) and ships back as a broadcast
+    * semi-join — which makes the whole phase-0 pipeline run exactly
+    * once, eagerly. Above it the candidate set stays distributed (lazy
+    * semi-join, anchor pass recomputed at execution). 0 forces the
+    * lazy semi-join.
     */
-  val SpanWinnowDriverMaxIdsKey = "spark.graft.span.winnowDriverMaxIds"
-  val SpanWinnowDriverMaxIdsDefault: Long = 4000000L
+  val DefaultWinnowDriverMaxIds: Long = 4000000L
 
-  /** Conf key (UNSET by default — the item cap is then derived from
-    * [[SpanWinnowBloomMaxBytesKey]]; 0 disables the Bloom): explicit
-    * override for the largest candidate gram volume (upper-bounded by
-    * the candidates' total text chars) for which the winnow
-    * prefilter's full-corpus over-cap count pass is Bloom-gated on
-    * the CANDIDATE gram-hash set (~9.6 bits/item at 1% fpp).
-    * Counting stays corpus-wide — the map side still scans every
-    * document — but only hashes the candidates can actually hold
-    * shuffle into the count aggregate, so on sparse corpora the
-    * correction pass's exchange collapses with the posting pass's.
-    * Bloom false positives only ADD counted hashes (harmless:
+  /** Memory ceiling for the winnow prefilter's over-cap Bloom filter,
+    * which gates the full-corpus over-cap count pass on the CANDIDATE
+    * gram-hash set. Counting stays corpus-wide — the map side still
+    * scans every document — but only hashes the candidates can
+    * actually hold shuffle into the count aggregate, so on sparse
+    * corpora the correction pass's exchange collapses with the posting
+    * pass's. Bloom false positives only ADD counted hashes (harmless:
     * `blockedH` is consumed by an anti-join); false negatives are
     * impossible for inserted values, so cap semantics stay exact.
+    *
+    * The filter is always SIZED to the measured candidate char volume
+    * (its true item upper bound) at 1% fpp ≈ 1.2 B/item; this ceiling
+    * only bounds how large that sizing may grow — candidate volumes up
+    * to [[DefaultWinnowBloomMaxItems]] (≈ 447 M chars) stay gated. The
+    * static 32 M-item cap this replaces cliff-ed the round-19 5 M-doc
+    * sparse probe into the un-Bloomed count pass (measured ~2.35×
+    * slower at 500 k docs) the moment candidate volume outgrew a
+    * number chosen at 500 k. Past the ceiling the count pass degrades
+    * to the full un-Bloomed shuffle LOUDLY (a warning names the volume
+    * and the ceiling).
     */
-  val SpanWinnowBlockedBloomMaxItemsKey = "spark.graft.span.winnowBlockedBloomMaxItems"
-
-  /** Conf key (default 512 MB): memory ceiling for the winnow
-    * prefilter's over-cap Bloom filter. The filter is always SIZED to
-    * the measured candidate char volume (its true item upper bound)
-    * at 1% fpp ≈ 1.2 B/item; this ceiling only bounds how large that
-    * sizing may grow — candidate volumes up to ~bytes/1.2 items
-    * (default ≈ 447 M chars) stay gated. The static 32 M-item default
-    * this replaces cliff-ed the round-19 5 M-doc sparse probe into
-    * the un-Bloomed count pass (measured ~2.35× slower at 500 k docs)
-    * the moment candidate volume outgrew a number chosen at 500 k.
-    * Past the ceiling the count pass degrades to the full un-Bloomed
-    * shuffle LOUDLY (a warning names the volume, the ceiling, and
-    * this key). A real executor fleet broadcasts the filter once per
-    * executor, so the ceiling can be raised aggressively there.
-    */
-  val SpanWinnowBloomMaxBytesKey = "spark.graft.span.winnowBloomMaxBytes"
-  val SpanWinnowBloomMaxBytesDefault: Long = 512L << 20
+  val WinnowBloomMaxBytes: Long = 512L << 20
 
   /** ~9.6 bits/item at the 1% fpp the gate builds with. */
   private val BloomBytesPerItem = 1.2
 
-  /** Effective item cap for the over-cap Bloom: an explicitly set
-    * [[SpanWinnowBlockedBloomMaxItemsKey]] wins (0 disables);
-    * otherwise derived from the [[SpanWinnowBloomMaxBytesKey]] memory
-    * ceiling.
+  /** Item cap of the over-cap Bloom (0 disables it): the byte ceiling
+    * [[WinnowBloomMaxBytes]] at [[BloomBytesPerItem]].
     */
-  private[graft] def resolveBloomItemCap(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(SpanWinnowBlockedBloomMaxItemsKey)
-      .map(_.toLong)
-      .getOrElse {
-        val bytes = spark.conf.get(SpanWinnowBloomMaxBytesKey,
-          SpanWinnowBloomMaxBytesDefault.toString).toLong
-        (bytes / BloomBytesPerItem).toLong
-      }
+  val DefaultWinnowBloomMaxItems: Long = (WinnowBloomMaxBytes / BloomBytesPerItem).toLong
+
+  /** The winnow prefilter's tuning limits. [[repeatedSpans]] always
+    * runs with the defaults; specs pass other values to reach the
+    * bail-out, probe, lazy semi-join and un-Bloomed arms.
+    */
+  private[graft] final case class WinnowLimits(
+      maxCandidateFrac: Double = DefaultWinnowMaxCandidateFrac,
+      densitySampleFrac: Double = DefaultWinnowDensitySampleFrac,
+      driverMaxIds: Long = DefaultWinnowDriverMaxIds,
+      bloomMaxItems: Long = DefaultWinnowBloomMaxItems)
 
   /** The repeated-span k-gram stream of `src`: one (id, pos, h) per
     * k-gram of the normalized text, ids cast to long.
@@ -1161,30 +1154,25 @@ object Dedup {
   private def resolveWinnowPrefilter(
       base: DataFrame, textCol: String, idCol: String,
       k: Int, minLen: Int, maxGramFreq: Int,
-      includeSelf: Boolean): Option[(DataFrame, DataFrame)] = {
+      includeSelf: Boolean, limits: WinnowLimits): Option[(DataFrame, DataFrame)] = {
     val spark = base.sparkSession
     val w = minLen - k + 1
     if (!spark.conf.get(SpanWinnowPrefilterKey, "false").toBoolean || w < 2)
       return None
-    val frac = spark.conf.get(SpanWinnowMaxCandidateFracKey,
-      SpanWinnowMaxCandidateFracDefault.toString).toDouble
-    val driverMax = spark.conf.get(SpanWinnowDriverMaxIdsKey,
-      SpanWinnowDriverMaxIdsDefault.toString).toLong
+    val WinnowLimits(frac, probeFrac, driverMax, bloomMax) = limits
     // density pre-probe: run the candidate test on a sampled slice
     // first — on a duplicate-saturated corpus it reaches the bail
     // decision at ~the sample's cost instead of a full anchor pass
-    // (see [[SpanWinnowDensitySampleFracKey]] for why bailing on the
-    // sample is conservative)
-    val probeFrac = spark.conf.get(SpanWinnowDensitySampleFracKey,
-      SpanWinnowDensitySampleFracDefault.toString).toDouble
-    // frac >= 1 disables the density guard entirely (the equivalence
-    // specs' setting) — a probe that can never bail is pure overhead
+    // (see [[DefaultWinnowDensitySampleFrac]] for why bailing on the
+    // sample is conservative). frac >= 1 disables the density guard
+    // entirely (the equivalence specs' setting) — a probe that can
+    // never bail is pure overhead
     if (probeFrac > 0 && probeFrac < 1.0 && frac < 1.0) {
       val sample = base.sample(withReplacement = false, probeFrac, seed = 42L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val nS = sample.count()
-        if (nS >= SpanWinnowDensitySampleMinDocs) {
+        if (nS >= WinnowDensitySampleMinDocs) {
           val nCandS = winnowCandidateIds(
             winnowPerDocAnchors(sample, textCol, idCol, k, w), includeSelf)
             .count()
@@ -1219,13 +1207,12 @@ object Dedup {
       val fullH = spanGramStream(base, textCol, idCol, k)
         .select(col("g.h").as("h"))
       // Bloom-gate the over-cap count's SHUFFLE on the candidate gram
-      // set (see [[SpanWinnowBloomMaxBytesKey]] — exactness
+      // set (see [[WinnowBloomMaxBytes]] — exactness
       // preserved: no false negatives, false positives only add
       // counted hashes the anti-join never matches). Candidate gram
       // volume is upper-bounded by candidate text chars; the filter is
-      // SIZED to that measured volume under the byte ceiling.
-      val bloomMax = resolveBloomItemCap(spark)
-      // the candChars probe EXECUTES candCorpus; in lazy semi-join mode
+      // SIZED to that measured volume under the byte ceiling. The
+      // candChars probe EXECUTES candCorpus; in lazy semi-join mode
       // (nCand > driverMax) that re-runs the whole anchor pass just to
       // decide a Bloom gate that a corpus too big to driver-collect
       // would almost surely exceed anyway — skip straight to fullH
@@ -1242,8 +1229,7 @@ object Dedup {
               s"chars exceeds the Bloom ceiling $bloomMax items " +
               s"(~${(bloomMax * BloomBytesPerItem).toLong} B) — the over-cap " +
               "count pass degrades to the full un-Bloomed shuffle (~2.35x " +
-              s"slower measured at 500k docs); raise $SpanWinnowBloomMaxBytesKey " +
-              "to keep it gated")
+              "slower measured at 500k docs)")
           fullH
         } else {
           val bf = spanGramStream(candCorpus, textCol, idCol, k)
@@ -1296,9 +1282,7 @@ object Dedup {
         // conservatively LARGE, which picks the scale-safe bounded form.
         val bytes = df.select(col(idCol), col(textCol))
           .queryExecution.optimizedPlan.stats.sizeInBytes
-        val threshold = BigInt(df.sparkSession.conf
-          .get(SpanBoundedMinBytesKey, SpanBoundedMinBytesDefault.toString))
-        if (bytes >= threshold) SpanIndexBounded else SpanIndexWindow
+        if (bytes >= SpanBoundedMinBytes) SpanIndexBounded else SpanIndexWindow
       case other => throw new IllegalArgumentException(
         s"unknown span index strategy '$other' (auto|bounded|window)")
     }

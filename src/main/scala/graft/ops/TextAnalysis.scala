@@ -182,8 +182,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Conf key (default 2 M, 0 forces the distributed loop): largest
-    * distinct-word vocabulary [[bpeLearnMerges]] finishes driver-side.
+  /** Largest distinct-word vocabulary [[bpeLearnMerges]] finishes
+    * driver-side (0 forces the distributed loop).
     * The corpus-sized word-count pass is always distributed; the merge
     * loop itself only ever touches the VOCABULARY-sized (word, count)
     * table, and for any realistic tokenizer run that table fits driver
@@ -194,15 +194,14 @@ object TextAnalysis {
     * path (hours at real merge counts). Above the cap the loop stays
     * distributed — same merge table either way (spec-pinned).
     */
-  val BpeDriverMaxVocabKey = "spark.graft.bpe.driverMaxVocab"
-  val BpeDriverMaxVocabDefault: Long = 2000000L
+  val DefaultBpeDriverMaxVocab: Long = 2000000L
 
   /** Character-level BPE merge learning (Sennrich et al. 2016) — the
     * step after [[adjacentPairCounts]] in training a tokenizer on a
     * corpus. One distributed pass aggregates word counts (the ONLY
     * corpus-sized job); the merge loop then runs on the
     * vocabulary-sized (word, count) table, driver-side whenever the
-    * vocabulary fits [[BpeDriverMaxVocabKey]] (the standard trainer
+    * vocabulary fits [[DefaultBpeDriverMaxVocab]] (the standard trainer
     * shape: a lazily-invalidated pair max-heap with incremental count
     * updates touching only the words that contain the merged pair),
     * and as an iterative Spark job otherwise: per iteration a weighted
@@ -230,7 +229,13 @@ object TextAnalysis {
   def bpeLearnMerges(
       df: DataFrame,
       textCol: String = "text",
-      numMerges: Int = 8): DataFrame = {
+      numMerges: Int = 8): DataFrame =
+    bpeLearnMerges(df, textCol, numMerges, DefaultBpeDriverMaxVocab)
+
+  /** [[bpeLearnMerges]] with an explicit driver-side vocabulary ceiling. */
+  private[graft] def bpeLearnMerges(
+      df: DataFrame, textCol: String, numMerges: Int,
+      driverMaxVocab: Long): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = df.sparkSession
     import spark.implicits._
@@ -243,11 +248,9 @@ object TextAnalysis {
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("s"), col("wc"))
       .cache()
     try {
-      val driverMax = spark.conf
-        .get(BpeDriverMaxVocabKey, BpeDriverMaxVocabDefault.toString).toLong
       val nVocab = words.count()
       val merges =
-        if (driverMax > 0 && nVocab <= driverMax)
+        if (driverMaxVocab > 0 && nVocab <= driverMaxVocab)
           learnMergesDriver(words.as[(String, Long)].collect(), numMerges)
         else learnMergesDistributed(words, numMerges)
       merges.toDF("step", "pair", "cnt")

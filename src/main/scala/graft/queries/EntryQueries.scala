@@ -331,21 +331,37 @@ object EntryQueries {
       | round(CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE) / count(*), 6) AS vavg
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** Worker routing placement counts (md5 hash variant for the oracle;
-    * crc32 is the runtime default, pinned by unit test).
-    */
+  /** Worker routing placement counts under the runtime's crc32 routing. */
   def qRouteWorkers(spark: SparkSession, dir: String): DataFrame = {
     val df = T(spark, dir, "events").withColumn("partitionKey", col("event_type"))
-    Router.route(df, 4, Router.Partition(Partitioner.Md5))
+    Router.route(df, 4, Router.Partition)
       .groupBy("partitionKey", "workerId")
       .agg(count(lit(1)).as("n"))
   }
 
+  /** DuckDB has no crc32, so the oracle computes the IEEE CRC32 of each
+    * distinct key bit by bit (reflected polynomial 0xEDB88320 over the
+    * key's UTF-8 bytes, read from its hex form).
+    */
   val qRouteWorkersSql: String =
-    """SELECT event_type AS partitionKey,
-      | CAST(CAST('0x' || substr(md5(event_type), 1, 8) AS UBIGINT) % 4 AS INTEGER) AS workerId,
+    """WITH RECURSIVE k AS (
+      |  SELECT DISTINCT event_type AS key, hex(encode(event_type)) AS hx
+      |  FROM events WHERE event_type IS NOT NULL),
+      |c(key, hx, i, crc) AS (
+      |  SELECT key, hx, 0, CAST(4294967295 AS UBIGINT) FROM k
+      |  UNION ALL
+      |  SELECT key, hx, i + 1,
+      |    CASE WHEN (b & 1) = 1 THEN xor(b >> 1, CAST(3988292384 AS UBIGINT)) ELSE b >> 1 END
+      |  FROM (SELECT key, hx, i,
+      |      CASE WHEN i % 8 = 0
+      |        THEN xor(crc, CAST('0x' || substr(hx, 2 * (i // 8) + 1, 2) AS UBIGINT))
+      |        ELSE crc END AS b
+      |    FROM c WHERE i < 4 * length(hx)) s)
+      |SELECT e.event_type AS partitionKey,
+      | CAST(xor(c.crc, CAST(4294967295 AS UBIGINT)) % 4 AS INTEGER) AS workerId,
       | count(*) AS n
-      |FROM events GROUP BY 1, 2""".stripMargin
+      |FROM events e LEFT JOIN c ON c.key = e.event_type AND c.i = 4 * length(c.hx)
+      |GROUP BY 1, 2""".stripMargin
 
   /** Count-capped chunk assignment (Kinesis 500-record cap shape). */
   def qChunkSizes(spark: SparkSession, dir: String): DataFrame =

@@ -59,8 +59,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.sources.pg.PgWalReceiver]] spools the replication stream into
   * the same layout (exercised against a real server by `LivePgSoakSpec`).
   *
-  * Output schema: line, walStart, serverWalEnd, serverTimeMs, txn,
-  * timeBasedKey — feed straight into
+  * Output schema: line, walStart, serverTimeMs, txn, timeBasedKey —
+  * feed straight into
   * [[graft.streaming.CdcPipeline.transform]].
   */
 class WalSourceProvider extends TableProvider with DataSourceRegister {
@@ -80,7 +80,6 @@ object WalSource {
   val schema: StructType = StructType(Seq(
     StructField("line", StringType),
     StructField("walStart", LongType),
-    StructField("serverWalEnd", LongType),
     StructField("serverTimeMs", LongType),
     StructField("txn", StringType),
     StructField("timeBasedKey", StringType)))
@@ -591,16 +590,14 @@ class WalReaderFactory extends PartitionReaderFactory {
       private val stamp = new TxnStamp(p.startTxn, p.startTbk, p.epochNanos)
       // one row, refilled per line: the scan's projection copies it out
       private val row = new GenericInternalRow(WalSource.schema.length)
-      row.setLong(3, 0L)
+      row.setLong(2, 0L)
 
       override def next(): Boolean = lines.next() && {
-        val lsn = lines.lineNo + 1
         stamp.advance(lines.line)
         row.update(0, UTF8String.fromBytes(lines.line))
-        row.setLong(1, lsn)
-        row.setLong(2, lsn)
-        row.update(4, stamp.txn)
-        row.update(5, stamp.tbk)
+        row.setLong(1, lines.lineNo + 1)
+        row.update(3, stamp.txn)
+        row.update(4, stamp.tbk)
         true
       }
       override def get(): InternalRow = row

@@ -56,12 +56,12 @@ final case class CdcConfig(
 object CdcPipeline {
 
   /** Stateless transform: a DataFrame with (`line`, and optionally
-    * `walStart`/`serverWalEnd`/`serverTimeMs`/`txn`/`timeBasedKey`
+    * `walStart`/`serverTimeMs`/`txn`/`timeBasedKey`
     * metadata) → marshalled change records. Works identically on batch
     * and streaming frames.
     */
   def transform(lines: DataFrame, cfg: CdcConfig): DataFrame = {
-    val withMeta = Seq("walStart", "serverWalEnd", "serverTimeMs")
+    val withMeta = Seq("walStart", "serverTimeMs")
       .foldLeft(lines)((df, c) =>
         if (df.columns.contains(c)) df else df.withColumn(c, lit(0L)))
 

@@ -13,7 +13,9 @@ final case class SinkRecord(partitionKey: String, timeBasedKey: String,
   *    (kinesis/batch/batch.go:32-37)
   *  - Kafka: 5000 records / 1 MB record (kafka/config.go:43-64)
   *  - RabbitMQ: 5000 records (rabbitmq/config.go:47-50)
-  *  - S3: 50 000 records/object (s3/config.go:53-56)
+  *  - S3: 50 000 records/object (s3/config.go:53-56). The gzip file
+  *    sink has no such cap: admission (`--client-buffer-size`) and the
+  *    per-slice part files bound each gzip object.
   */
 final case class BatchCaps(maxRecords: Int, maxBatchBytes: Long, maxRecordBytes: Long) {
   // A record admitted by maxRecordBytes must also fit a batch by
@@ -26,7 +28,6 @@ object BatchCaps {
   val kinesis: BatchCaps = BatchCaps(500, 5L * 1024 * 1024, 1L * 1024 * 1024)
   val kafka: BatchCaps = BatchCaps(5000, Long.MaxValue, 1000000L)
   val rabbitmq: BatchCaps = BatchCaps(5000, Long.MaxValue, Long.MaxValue)
-  val s3: BatchCaps = BatchCaps(50000, Long.MaxValue, Long.MaxValue)
 }
 
 /** One packed chunk plus the records dropped for exceeding the

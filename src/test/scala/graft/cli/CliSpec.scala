@@ -38,7 +38,7 @@ class CliSpec extends AnyFunSuite {
     val cfg = Main.cdcConfig(c)
     assert(cfg.whitelist && cfg.filterTables == Seq("public.a", "public.b"))
     assert(cfg.partitionMethod == graft.operators.Partitioner.TransactionBucket(8))
-    assert(cfg.routing == graft.operators.Router.Partition())
+    assert(cfg.routing == graft.operators.Router.Partition)
     assert(cfg.triggerMillis == 250L)
 
     // --key=value form and the -s shorthand

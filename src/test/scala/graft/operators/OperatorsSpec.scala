@@ -59,7 +59,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("router partition mode: one worker per partition key, stable crc32 placement") {
     val df = (1 to 1000).map(i => (s"key${i % 7}", i)).toDF("partitionKey", "v")
-    val routed = Router.route(df, 4, Router.Partition())
+    val routed = Router.route(df, 4, Router.Partition)
     val placement = routed.select("partitionKey", "workerId").distinct().collect()
     assert(placement.length == 7) // exactly one workerId per key
     placement.foreach { r =>

@@ -75,16 +75,6 @@ class BpeSpec extends AnyFunSuite {
     assert(got.toSeq == Seq((1, "x y", 2L)))
   }
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("driver-path merge sequence ≡ distributed-path merge sequence") {
     // run-heavy + tie-heavy corpus so both the greedy-overlap rule and
     // the (count desc, pair asc) tie-break are loop-carried through
@@ -95,10 +85,8 @@ class BpeSpec extends AnyFunSuite {
       (3L, "mississippi riverbank banana abab abab")).toDF("doc_id", "text")
     val driver = TextAnalysis.bpeLearnMerges(df, "text", numMerges = 25)
       .as[(Int, String, Long)].collect().toSeq.sortBy(_._1)
-    val dist = withConf(TextAnalysis.BpeDriverMaxVocabKey, "0") {
-      TextAnalysis.bpeLearnMerges(df, "text", numMerges = 25)
-        .as[(Int, String, Long)].collect().toSeq.sortBy(_._1)
-    }
+    val dist = TextAnalysis.bpeLearnMerges(df, "text", numMerges = 25, driverMaxVocab = 0)
+      .as[(Int, String, Long)].collect().toSeq.sortBy(_._1)
     assert(driver == dist)
     assert(driver.nonEmpty)
     // and both still match the independent list-based reference

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -80,17 +81,18 @@ class SpanPlanSpec extends AnyFunSuite {
   }
 
   test("auto picks window below the size threshold and bounded above it") {
-    // a 50-doc LocalRelation is far below the default 16 MiB threshold
+    // a 50-doc LocalRelation is far below the 1 MiB threshold
     val small = Dedup.repeatedSpans(docs, "text", "doc_id")
     assert(!small.queryExecution.executedPlan.toString.contains("bounded_posting_list"),
       "tiny input must take the window form")
-    // forcing the threshold to zero makes the same input take the
-    // bounded form — the conf is the documented scale override
-    spark.conf.set(Dedup.SpanBoundedMinBytesKey, "0")
-    try {
-      val big = Dedup.repeatedSpans(docs, "text", "doc_id")
-      assert(big.queryExecution.executedPlan.toString.contains("bounded_posting_list"),
-        "above-threshold input must take the bounded form")
-    } finally spark.conf.unset(Dedup.SpanBoundedMinBytesKey)
+    // a 256 k-row range estimates above it (Catalyst sizes Range from
+    // its row count); only the plan is built, no job runs
+    val large = spark.range(0L, 1L << 18)
+      .select(col("id").as("doc_id"), concat(lit("doc "), col("id").cast("string")).as("text"))
+    assert(large.queryExecution.optimizedPlan.stats.sizeInBytes >= Dedup.SpanBoundedMinBytes,
+      "fixture must estimate above the threshold")
+    val big = Dedup.repeatedSpans(large, "text", "doc_id")
+    assert(big.queryExecution.executedPlan.toString.contains("bounded_posting_list"),
+      "above-threshold input must take the bounded form")
   }
 }

@@ -32,20 +32,19 @@ class SpanWinnowEquivalenceSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private def withWinnow[A](on: Boolean, frac: Double = 1.1,
-                            driverMax: Long = 4000000L,
-                            bloomMax: Long = 32000000L)(f: => A): A = {
+  private def withWinnow[A](on: Boolean)(f: => A): A = {
     spark.conf.set(Dedup.SpanWinnowPrefilterKey, on.toString)
-    spark.conf.set(Dedup.SpanWinnowMaxCandidateFracKey, frac.toString)
-    spark.conf.set(Dedup.SpanWinnowDriverMaxIdsKey, driverMax.toString)
-    spark.conf.set(Dedup.SpanWinnowBlockedBloomMaxItemsKey, bloomMax.toString)
-    try f finally {
-      spark.conf.unset(Dedup.SpanWinnowPrefilterKey)
-      spark.conf.unset(Dedup.SpanWinnowMaxCandidateFracKey)
-      spark.conf.unset(Dedup.SpanWinnowDriverMaxIdsKey)
-      spark.conf.unset(Dedup.SpanWinnowBlockedBloomMaxItemsKey)
-    }
+    try f finally spark.conf.unset(Dedup.SpanWinnowPrefilterKey)
   }
+
+  /** The spec's default limits: the candidate-fraction guard off (1.1,
+    * which also skips the density probe), both shipping modes and the
+    * Bloom at values the small corpora below stay under.
+    */
+  private def limits(frac: Double = 1.1, probeFrac: Double = 0.01,
+                     driverMax: Long = 4000000L,
+                     bloomMax: Long = 32000000L): Dedup.WinnowLimits =
+    Dedup.WinnowLimits(frac, probeFrac, driverMax, bloomMax)
 
   // ---- layer 1: the expression ------------------------------------
 
@@ -193,10 +192,11 @@ class SpanWinnowEquivalenceSpec extends AnyFunSuite {
   }
 
   private def spans(docs: org.apache.spark.sql.DataFrame, k: Int, minLen: Int,
-                    maxFreq: Int, includeSelf: Boolean, strategy: String):
+                    maxFreq: Int, includeSelf: Boolean, strategy: String,
+                    lim: Dedup.WinnowLimits = limits()):
       Set[(Long, Long, Int, Int, Long)] =
     Dedup.repeatedSpans(docs, "text", "doc_id", k, minLen, maxFreq,
-      includeSelf = includeSelf, strategy = strategy)
+      includeSelf, strategy, lim)
       .as[(Long, Long, Int, Int, Long)].collect().toSet
 
   test("winnow prefilter is result-identical on random corpora (strategies x includeSelf x shipping modes)") {
@@ -214,8 +214,9 @@ class SpanWinnowEquivalenceSpec extends AnyFunSuite {
         spans(docs, k, minLen, maxFreq, includeSelf, strategy)
       }
       assert(want.nonEmpty, s"seed=$seed planted no spans — fixture too weak")
-      val got = withWinnow(on = true, driverMax = driverMax, bloomMax = bloomMax) {
-        spans(docs, k, minLen, maxFreq, includeSelf, strategy)
+      val got = withWinnow(on = true) {
+        spans(docs, k, minLen, maxFreq, includeSelf, strategy,
+          lim = limits(driverMax = driverMax, bloomMax = bloomMax))
       }
       assert(got == want,
         s"seed=$seed self=$includeSelf strategy=$strategy driverMax=$driverMax bloomMax=$bloomMax")
@@ -257,8 +258,9 @@ class SpanWinnowEquivalenceSpec extends AnyFunSuite {
       // the fixture must actually fragment: two rows for the (1,2) pair
       assert(want.count(r => r._1 == 1L && r._2 == 2L) == 2,
         s"fixture did not fragment as designed: $want")
-      val got = withWinnow(on = true, bloomMax = bloomMax) {
-        spans(docs, k, minLen, maxFreq, includeSelf = false, strategy = strategy)
+      val got = withWinnow(on = true) {
+        spans(docs, k, minLen, maxFreq, includeSelf = false, strategy = strategy,
+          lim = limits(bloomMax = bloomMax))
       }
       assert(got == want, s"strategy=$strategy bloomMax=$bloomMax")
     }
@@ -271,8 +273,9 @@ class SpanWinnowEquivalenceSpec extends AnyFunSuite {
       spans(docs, k, minLen, maxFreq, includeSelf = false, Dedup.SpanIndexBounded)
     }
     // frac = 0.0: every corpus is "dense", phase 0 must bail to base
-    val bailed = withWinnow(on = true, frac = 0.0) {
-      spans(docs, k, minLen, maxFreq, includeSelf = false, Dedup.SpanIndexBounded)
+    val bailed = withWinnow(on = true) {
+      spans(docs, k, minLen, maxFreq, includeSelf = false, Dedup.SpanIndexBounded,
+        lim = limits(frac = 0.0))
     }
     assert(bailed == want)
     // minLen == k: w = 1, the prefilter cannot help and must step aside
@@ -304,35 +307,20 @@ class SpanWinnowEquivalenceSpec extends AnyFunSuite {
         spans(docs, k, minLen, maxFreq, includeSelf = false, Dedup.SpanIndexBounded)
       }
       // probeFrac 0.9 so the 600-doc sample clears the 500-doc noise
-      // floor; frac 0.5 (not withWinnow's guard-disabling 1.1 default)
+      // floor; frac 0.5 (not limits()'s guard-disabling 1.1 default)
       // so the probe can actually bail on the saturated corpus
-      spark.conf.set(Dedup.SpanWinnowDensitySampleFracKey, "0.9")
-      val got = try withWinnow(on = true, frac = 0.5) {
-        spans(docs, k, minLen, maxFreq, includeSelf = false, Dedup.SpanIndexBounded)
-      } finally spark.conf.unset(Dedup.SpanWinnowDensitySampleFracKey)
+      val got = withWinnow(on = true) {
+        spans(docs, k, minLen, maxFreq, includeSelf = false, Dedup.SpanIndexBounded,
+          lim = limits(frac = 0.5, probeFrac = 0.9))
+      }
       assert(got == want)
     }
   }
 
-  test("bloom item cap: derived from the byte ceiling unless the items key is set") {
-    spark.conf.unset(Dedup.SpanWinnowBlockedBloomMaxItemsKey)
-    spark.conf.unset(Dedup.SpanWinnowBloomMaxBytesKey)
-    try {
-      // default: no items key -> bytes ceiling / 1.2 B per item
-      assert(Dedup.resolveBloomItemCap(spark) ==
-        (Dedup.SpanWinnowBloomMaxBytesDefault / 1.2).toLong)
-      // a lowered byte ceiling lowers the derived cap proportionally
-      spark.conf.set(Dedup.SpanWinnowBloomMaxBytesKey, (120L << 20).toString)
-      assert(Dedup.resolveBloomItemCap(spark) == ((120L << 20) / 1.2).toLong)
-      // an explicit items key overrides the derivation entirely
-      spark.conf.set(Dedup.SpanWinnowBlockedBloomMaxItemsKey, "12345")
-      assert(Dedup.resolveBloomItemCap(spark) == 12345L)
-      // and 0 still disables the Bloom outright
-      spark.conf.set(Dedup.SpanWinnowBlockedBloomMaxItemsKey, "0")
-      assert(Dedup.resolveBloomItemCap(spark) == 0L)
-    } finally {
-      spark.conf.unset(Dedup.SpanWinnowBlockedBloomMaxItemsKey)
-      spark.conf.unset(Dedup.SpanWinnowBloomMaxBytesKey)
-    }
+  test("bloom item cap: derived from the byte ceiling") {
+    // 512 MiB at 1.2 B per item (1% fpp): ~447 M candidate chars stay gated
+    assert(Dedup.WinnowBloomMaxBytes == (512L << 20))
+    assert(Dedup.DefaultWinnowBloomMaxItems == ((512L << 20) / 1.2).toLong)
+    assert(Dedup.WinnowLimits().bloomMaxItems == Dedup.DefaultWinnowBloomMaxItems)
   }
 }

@@ -98,7 +98,7 @@ class PlanInflationSpec extends AnyFunSuite {
       whitelist = true,
       partitionMethod = Partitioner.TransactionBucket(16),
       workers = 4,
-      routing = Router.Partition())
+      routing = Router.Partition)
     val found = for (
         (sessionName, s) <- Seq("TestSpark" -> spark, "no extensions" -> plain);
         (cfgName, cfg) <- Seq("CdcConfig()" -> CdcConfig(), "filtered_fanout" -> filteredFanout)) yield {

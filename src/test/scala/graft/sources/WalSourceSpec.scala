@@ -115,13 +115,15 @@ class WalSourceSpec extends AnyFunSuite {
     */
   private def rowsOf(slices: Array[InputPartition]): Seq[(String, Long, String, String)] = {
     val factory = new WalReaderFactory
+    val Seq(line, walStart, txn, tbk) =
+      Seq("line", "walStart", "txn", "timeBasedKey").map(WalSource.schema.fieldIndex)
     slices.toSeq.flatMap { p =>
       val r = factory.createReader(p)
       val out = ArrayBuffer[(String, Long, String, String)]()
       try while (r.next()) {
         val row: InternalRow = r.get()
-        out += ((row.getUTF8String(0).toString, row.getLong(1),
-          row.getUTF8String(4).toString, row.getUTF8String(5).toString))
+        out += ((row.getUTF8String(line).toString, row.getLong(walStart),
+          row.getUTF8String(txn).toString, row.getUTF8String(tbk).toString))
       } finally r.close()
       out
     }

@@ -127,8 +127,8 @@ class CdcPipelineSpec extends AnyFunSuite {
     val stamp = new graft.sources.TxnStamp("", "", 0L)
     val single = wal.zipWithIndex.map { case (l, i) =>
       stamp.advance(l.getBytes("UTF-8"))
-      (l, i + 1L, i + 1L, 0L, stamp.txn.toString, stamp.tbk.toString)
-    }.toDF("line", "walStart", "serverWalEnd", "serverTimeMs", "txn", "timeBasedKey")
+      (l, i + 1L, 0L, stamp.txn.toString, stamp.tbk.toString)
+    }.toDF("line", "walStart", "serverTimeMs", "txn", "timeBasedKey")
     val expected = CdcPipeline.transform(single, cdc).where(col("json").isNotNull)
       .select("json").as[String].collect().toSeq
     assert(parts.flatten.sortBy(lsn) == expected.sortBy(lsn))

@@ -70,7 +70,7 @@ class DeliverySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val dml = lines.indices.filter(i => lines(i).startsWith("table ")).map(_ + 1L)
 
     val cfg = CdcConfig(partitionMethod = Partitioner.TableName, workers = 4,
-      routing = Router.Partition())
+      routing = Router.Partition)
     val src = CdcPipeline.fromWalSource(spark, dir, maxLinesPerTrigger = Some(500),
       flushAgeMillis = 0)
     val q = CdcPipeline.toTransport(CdcPipeline.transform(src, cfg).where(col("json").isNotNull),
